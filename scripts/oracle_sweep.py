@@ -1,11 +1,12 @@
 """Batch DuckDB-oracle parity at an arbitrary SF dir.
 
-Mirrors the driver's comparison (row count + schema shape +
-order-insensitive value comparison, tests/oracle.py) for a given list
-of registered queries against a given sf dir — the tool behind the
-sf1/sf10 "verified at the Nx decade" sweeps in SCALING.md.
+Compares each registered query (all of them unless --queries names
+some) with its DuckDB oracle through tests/oracle.diff, the driver's
+exact comparison — the tool behind the sf1/sf10 "verified at the Nx
+decade" sweeps in SCALING.md.
 
 Usage:
+  python scripts/oracle_sweep.py --sf-dir /root/testdata/sf0.01
   python scripts/oracle_sweep.py --sf-dir testdata_big/sf10 \
       --queries q1_pricing_summary,dedup_exact [--timeout-s 600]
 
@@ -41,15 +42,17 @@ def _run_oracle(sf_dir: str, name: str, q):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
-    ap.add_argument("--queries", required=True)
+    ap.add_argument("--queries", default="",
+                    help="comma-separated names (default: every registered query)")
     ap.add_argument("--timeout-s", type=int, default=900,
                     help="per-query DuckDB oracle budget")
     args = ap.parse_args()
-    names = [n for n in args.queries.split(",") if n]
 
     from statcan_etl_pipeline_spark.registry import QUERIES
     from statcan_etl_pipeline_spark.session import get_spark
-    from tests.oracle import _norm_rows
+    from tests.oracle import diff
+
+    names = [n for n in args.queries.split(",") if n] or sorted(QUERIES)
 
     spark = get_spark(app_name="oracle_sweep")
     results: dict[str, dict] = {}
@@ -91,13 +94,8 @@ def main() -> None:
         proc.join()
         t_duck = time.time() - t0
 
-        ok = sorted(spark_cols) == sorted(duck_cols) and len(spark_rows) == len(
-            duck_rows
-        )
-        if ok:
-            ok = _norm_rows(spark_cols, spark_rows) == _norm_rows(
-                duck_cols, duck_rows
-            )
+        d = diff(spark_cols, spark_rows, duck_cols, duck_rows)
+        ok = not d
         results[name] = {
             "status": "MATCH" if ok else "MISMATCH",
             "rows": len(spark_rows),
@@ -110,6 +108,7 @@ def main() -> None:
             flush=True,
         )
         if not ok:
+            print(f"  (a=spark, b=duckdb) {d}", flush=True)
             bad.append(name)
     print(json.dumps({"sf_dir": args.sf_dir, "results": results}))
     sys.exit(1 if bad else 0)

@@ -22,7 +22,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -42,18 +45,30 @@ from statcan_etl_pipeline_spark.streaming.jobs import (  # noqa: E402
 )
 
 
-def _stage_dir(sf_dir: str) -> str:
-    import tempfile
+_PLAN_NODES = (
+    "Exchange",
+    "StateStoreSave",
+    "StateStoreRestore",
+    "SessionWindowStateStoreSave",
+    "SessionWindowStateStoreRestore",
+    "StreamingSymmetricHashJoin",
+    "StreamingDeduplicate",
+    "StreamingDeduplicateWithinWatermark",
+    "BatchEvalPython",
+    "ArrowEvalPython",
+)
 
+
+def _stage_dir(sf_dir: str) -> str:
     d = tempfile.mkdtemp(prefix="events_stream_")
     os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
     return d
 
 
-def _normalized_stream(spark, sf_dir):
+def _normalized_stream(spark, sf_dir, stage_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    raw = events_stream(spark, _stage_dir(sf_dir), schema)
+    raw = events_stream(spark, stage_dir, schema)
     if dict(raw.dtypes).get("ts") == "bigint":
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
@@ -81,15 +96,9 @@ def _profile(spark, name: str, df) -> dict:
         plan = q._jsq.explainInternal(True)
     except Exception as e:
         plan = f"(plan unavailable: {e})"
+    # whole node names only: "Exchange" must not count BroadcastExchange
     census = {
-        "Exchange": plan.count("Exchange"),
-        "StateStoreSave": plan.count("StateStoreSave"),
-        "StateStoreRestore": plan.count("StateStoreRestore"),
-        "SessionWindowStateStore": plan.count("SessionWindowStateStore"),
-        "StreamingSymmetricHashJoin": plan.count("StreamingSymmetricHashJoin"),
-        "StreamingDeduplicate": plan.count("StreamingDeduplicate"),
-        "BatchEvalPython": plan.count("BatchEvalPython"),
-        "ArrowEvalPython": plan.count("ArrowEvalPython"),
+        node: len(re.findall(rf"\b{node}\b", plan)) for node in _PLAN_NODES
     }
     out_rows = spark.table(f"prof_{name}").count()
     q.stop()
@@ -124,14 +133,18 @@ def main() -> None:
         "chained_windowed_max": lambda s: chained_windowed_max(s),
     }
     results = []
-    for name, build in jobs.items():
-        try:
-            df = build(_normalized_stream(spark, sf_dir))
-        except Exception as e:  # job not present in this build
-            results.append({"job": name, "error": str(e)[:200]})
-            continue
-        results.append(_profile(spark, name, df))
-        print(json.dumps(results[-1]), flush=True)
+    stage_dir = _stage_dir(sf_dir)
+    try:
+        for name, build in jobs.items():
+            try:
+                df = build(_normalized_stream(spark, sf_dir, stage_dir))
+            except Exception as e:  # job not present in this build
+                results.append({"job": name, "error": str(e)[:200]})
+                continue
+            results.append(_profile(spark, name, df))
+            print(json.dumps(results[-1]), flush=True)
+    finally:
+        shutil.rmtree(stage_dir)
     print(json.dumps({"sf_dir": sf_dir, "n_jobs": len(results)}))
     spark.stop()
 

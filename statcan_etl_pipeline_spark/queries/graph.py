@@ -21,8 +21,6 @@ is flat instead of the unrolled 146-Exchange tree.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -249,17 +247,14 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         )
 
 
-# Broadcast guard for the k-core decrement join (r15, VERDICT r14
-# item 4a/8): a removed set this large falls back to a shuffle join
-# instead of forcing a broadcast that could exceed executor memory /
-# the 8 GB broadcast cap at 100 TB. 4M longs ≈ 32 MB framed — inside
-# the session's 64 MB autoBroadcastJoinThreshold, far under the hard
-# cap. Env-parameterised so a cluster can lower it to its own memory
-# budget; the gate-SF removed sets are ≤ O(10^4), so the local plan
-# keeps the broadcast (pinned in tests/test_plans.py).
-_KCORE_BCAST_MAX_REMOVED = int(
-    os.environ.get("SPARK_GRAFT_KCORE_BCAST_MAX", 4_000_000)
-)
+# Broadcast guard for the k-core decrement join: a removed set this
+# large falls back to a shuffle join. The explicit broadcast() hint
+# bypasses autoBroadcastJoinThreshold, so the limits that matter are
+# Spark's 8 GB broadcast cap and driver/executor memory; 4M longs is
+# ~32 MB framed, far inside both. The gate-SF removed sets are
+# <= O(10^4), so the local plan keeps the broadcast (pinned in
+# tests/test_plans.py).
+_KCORE_BCAST_MAX_REMOVED = 4_000_000
 
 
 def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:

@@ -1,9 +1,8 @@
-"""DuckDB-oracle parity helpers mirroring the driver's comparison:
-row count + schema shape + order-insensitive value comparison."""
+"""DuckDB-oracle parity, compared exactly as the driver compares:
+same column set, same row count, and the same md5 over the sorted
+`repr` rows with columns taken in name order."""
 
 from __future__ import annotations
-
-import math
 
 import duckdb
 
@@ -19,21 +18,27 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0 and sub-epsilon float noise
-        return round(v + 0.0, 9)
-    return v
-
-
-def _norm_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
+def canonical_rows(cols: list[str], rows: list[tuple]) -> list[tuple[str, ...]]:
+    """The exact list the driver hashes: `md5(repr(canonical_rows(...)))`.
+    Equal lists give equal hashes, so comparing them is the driver's verdict."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_cell(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
+    return sorted(tuple(repr(r[i]) for i in order) for r in rows)
+
+
+def diff(a_cols: list[str], a_rows: list[tuple],
+         b_cols: list[str], b_rows: list[tuple]) -> str:
+    """Empty when the two results match under the driver's comparison,
+    else the first difference: column set, row count, or canonical row."""
+    if sorted(a_cols) != sorted(b_cols):
+        return (f"columns differ: only in a={sorted(set(a_cols) - set(b_cols))} "
+                f"only in b={sorted(set(b_cols) - set(a_cols))}")
+    if len(a_rows) != len(b_rows):
+        return f"row count a={len(a_rows)} b={len(b_rows)}"
+    ca, cb = canonical_rows(a_cols, a_rows), canonical_rows(b_cols, b_rows)
+    for i, (ra, rb) in enumerate(zip(ca, cb)):
+        if ra != rb:
+            return f"canonical row {i} of {sorted(a_cols)} differs\n a={ra}\n b={rb}"
+    return ""
 
 
 def assert_parity(spark, name: str, sf_dir: str) -> None:
@@ -41,20 +46,12 @@ def assert_parity(spark, name: str, sf_dir: str) -> None:
 
     sdf = QUERIES[name](spark, sf_dir)
     spark_rows = [tuple(r) for r in sdf.collect()]
-    spark_cols = list(sdf.columns)
 
     con = duck_connection(sf_dir)
     res = con.execute(ORACLES[name])
     duck_cols = [d[0] for d in res.description]
-    duck_rows = [tuple(r) for r in res.fetchall()]
+    duck_rows = res.fetchall()
     con.close()
 
-    assert sorted(spark_cols) == sorted(duck_cols), (
-        f"{name}: column mismatch spark={sorted(spark_cols)} duck={sorted(duck_cols)}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    ns, nd = _norm_rows(spark_cols, spark_rows), _norm_rows(duck_cols, duck_rows)
-    for i, (a, b) in enumerate(zip(ns, nd)):
-        assert a == b, f"{name}: row {i} differs\n spark={a}\n  duck={b}"
+    d = diff(list(sdf.columns), spark_rows, duck_cols, duck_rows)
+    assert not d, f"{name} (a=spark, b=duckdb): {d}"
