@@ -1,10 +1,12 @@
-"""Incremental-load operators: upsert (merge) and SCD2 history.
+"""Incremental-load operators: latest revision, upsert (merge) and SCD2
+history.
 
-An ETL pipeline's load side needs: apply a batch of corrections to a
-snapshot ("latest wins"), and keep dimension history as validity
-ranges. Both are single-shuffle window formulations — no MERGE
-statement or transactional table format needed (swap in Delta/Iceberg
-MERGE INTO on clusters that have it; the semantics here are identical).
+An ETL pipeline's load side needs: keep the newest revision per key,
+apply a batch of corrections to a snapshot ("latest wins"), and keep
+dimension history as validity ranges. All are single-shuffle window
+formulations — no MERGE statement or transactional table format needed
+(swap in Delta/Iceberg MERGE INTO on clusters that have it; the
+semantics here are identical).
 """
 
 from __future__ import annotations
@@ -13,6 +15,24 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+
+def latest_revision(
+    df: DataFrame, series_cols: list[str], order_cols: list[str]
+) -> DataFrame:
+    """Keep only the most recent revision per series key: the top row
+    by `order_cols` (each descending, NULLs last) within each
+    `series_cols` partition. One window shuffle on the key — the one
+    "latest value wins" primitive every merge below reduces to."""
+    w = W.partitionBy(*series_cols).orderBy(*[F.desc(c) for c in order_cols])
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
+def _tagged(base: DataFrame, updates: DataFrame) -> DataFrame:
+    """`base` ∪ `updates` tagged `__src` = 0 / 1; one-sided columns fill NULL."""
+    return base.withColumn("__src", F.lit(0)).unionByName(
+        updates.withColumn("__src", F.lit(1)), allowMissingColumns=True
+    )
 
 
 def upsert(
@@ -30,17 +50,8 @@ def upsert(
     (allowMissingColumns) — the other side fills NULL, mirroring
     Delta/Iceberg MERGE with automatic schema evolution. A batch that
     ADDS a column therefore merges cleanly; prior rows carry NULL."""
-    keys = list(keys)
-    tagged = base.withColumn("__src", F.lit(0)).unionByName(
-        updates.withColumn("__src", F.lit(1)), allowMissingColumns=True
-    )
-    order = [F.desc("__src")] + ([F.desc(order_col)] if order_col else [])
-    w = W.partitionBy(*keys).orderBy(*order)
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    order = ["__src"] + ([order_col] if order_col else [])
+    return latest_revision(_tagged(base, updates), keys, order).drop("__src")
 
 
 def merge_latest_by(
@@ -56,16 +67,7 @@ def merge_latest_by(
     order: a late-arriving OLDER revision must not overwrite a newer
     one already merged. Ties on order_col fall to the update side.
     One shuffle on the key; allowMissingColumns as in upsert."""
-    keys = list(keys)
-    tagged = base.withColumn("__src", F.lit(0)).unionByName(
-        updates.withColumn("__src", F.lit(1)), allowMissingColumns=True
-    )
-    w = W.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("__src"))
-    return (
-        tagged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    return latest_revision(_tagged(base, updates), keys, [order_col, "__src"]).drop("__src")
 
 
 def scd2_history(

@@ -1156,7 +1156,7 @@ def _banded_similarity(
     # candidate stream to save 0.9% of the verifies. dedup=False keeps
     # the emit pipelined straight into the verify joins; every verify
     # column (common, degrees, jaccard) is a deterministic function of
-    # the pair, so the distinct at the END collapses the duplicate
+    # the pair, so the pair-key dedup at the END collapses the duplicate
     # rows to the identical result set (parity EQUAL at sf0.1; A/B won
     # all pairs, 9.9-16.6 → 7.0-7.7 s).
     cand = lsh_pairs_from_index(banded, bucket_cap, dedup=False).select(
@@ -1200,10 +1200,10 @@ def _banded_similarity(
             "deg_y",
             pround(jac, 6).alias("jaccard"),
         )
-        # collapses the dedup=False emit's per-band duplicates (every
-        # column is pair-deterministic); runs over the τ-survivors
-        # only, not the 446k-pair candidate stream
-        .distinct()
+        # collapses the dedup=False emit's per-band duplicates on the
+        # pair key (every other column is pair-deterministic); runs
+        # over the τ-survivors only, not the 446k-pair candidate stream
+        .dropDuplicates(["part_x", "part_y"])
         .orderBy("part_x", "part_y")
     )
 

@@ -531,9 +531,9 @@ def _embedding_lsh_pairs(
     # at sf0.1 (370,588 raw vs 361,099 distinct bucket pairs), so
     # deduplicating BEFORE the verify paid a full shuffle + two hash
     # aggregates over every candidate to save 2.6% of the cosine folds;
-    # the cosine is deterministic per pair, so distinct-on-output
-    # (~400 survivor rows after the τ filter) collapses the duplicates
-    # to the identical pair set. Pair set + output parity-checked
+    # the cosine is deterministic per pair, so a dedup on the output's
+    # pair key (~400 survivor rows after the τ filter; never on the
+    # float column) collapses the duplicates to the identical pair set. Pair set + output parity-checked
     # exact; both consumers (dedup_embedding_lsh, dedup_embedding_
     # groups) oracle-MATCH at sf0.001/sf0.01.
     cand = (
@@ -563,7 +563,7 @@ def _embedding_lsh_pairs(
             daa="daa", dbb="dbb", min_value=COS_TAU,
         )
         .select("vec_a", "vec_b", "cosine")
-        .distinct()
+        .dropDuplicates(["vec_a", "vec_b"])
     )
 
 

@@ -129,16 +129,23 @@ class WdsCsvWriter(DataSourceWriter):
         return _CsvCommit(temp_path=tmp, n_rows=n)
 
     def commit(self, messages: Sequence[_CsvCommit]) -> None:
+        success = os.path.join(self.path, "_SUCCESS")
         if self.overwrite:
             for old in os.listdir(self.path):
                 if old.startswith("part-") or old == "_SUCCESS":
                     os.remove(os.path.join(self.path, old))
+        # append: new parts are numbered after the highest committed one
+        # and extend the committed list, so no committed part is replaced
         parts = []
-        for i, m in enumerate(messages):
+        if os.path.exists(success):
+            with open(success, encoding="utf-8") as f:
+                parts = [p for p in f.read().splitlines() if p]
+        first = 1 + max((int(p[5:-4]) for p in parts), default=-1)  # part-NNNNN.csv
+        for i, m in enumerate(messages, start=first):
             part = f"part-{i:05d}.csv"
             os.replace(m.temp_path, os.path.join(self.path, part))
             parts.append(part)
-        with open(os.path.join(self.path, "_SUCCESS"), "w", encoding="utf-8") as f:
+        with open(success, "w", encoding="utf-8") as f:
             f.write("\n".join(parts))
         self._sweep_temp()
 
@@ -284,13 +291,11 @@ class WdsCsvStreamWriter(DataSourceStreamWriter):
                 if m is not None and os.path.exists(m.temp_path):
                     os.remove(m.temp_path)
             return
-        kept = []
         for i, m in enumerate(messages):
             if m is None:
                 continue
             final = os.path.join(self.dir, f"batch-{batchId:05d}-{i:03d}.csv")
             os.replace(m.temp_path, final)
-            kept.append(final)
         with open(self._manifest(), "a") as f:
             f.write(f"{batchId}\n")
 

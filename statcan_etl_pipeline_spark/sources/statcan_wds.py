@@ -9,9 +9,11 @@ conformed dimension tables with surrogate keys, and expose
 (vector, ref_date, value) series.
 
 This module does those moves Spark-first: explicit schema (no
-inference pass), dimension extraction as distinct+zipWithIndex-free
-window-less hashing (dimension ids are deterministic dense ranks), and
+inference pass), dimension extraction as distinct members numbered by a
+global `dense_rank` window (deterministic ids, no zipWithIndex), and
 everything lazy so Catalyst prunes unused dimension columns at scan.
+Revision dedup is `operators.incremental.latest_revision`, re-exported
+here.
 """
 
 from __future__ import annotations
@@ -20,44 +22,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.incremental import latest_revision  # noqa: F401  (re-export)
+
+# Core columns in file order; the product dimension columns sit between
+# DGUID and UOM (see wds_schema).
 WDS_CORE_COLUMNS = [
-    "REF_DATE",
-    "GEO",
-    "DGUID",
-    "UOM",
-    "UOM_ID",
-    "SCALAR_FACTOR",
-    "SCALAR_ID",
-    "VECTOR",
-    "COORDINATE",
-    "VALUE",
-    "STATUS",
-    "SYMBOL",
-    "TERMINATED",
-    "DECIMALS",
+    "REF_DATE", "GEO", "DGUID",
+    "UOM", "UOM_ID", "SCALAR_FACTOR", "SCALAR_ID", "VECTOR", "COORDINATE",
+    "VALUE", "STATUS", "SYMBOL", "TERMINATED", "DECIMALS",
 ]
 
 
 def wds_schema(dimension_cols: list[str]) -> T.StructType:
     """Explicit schema for a WDS csv: core columns + product dimensions
-    (all read as string; VALUE/DECIMALS typed after parse)."""
-    fields = [T.StructField("REF_DATE", T.StringType())]
-    fields += [T.StructField(c, T.StringType()) for c in ["GEO", "DGUID"]]
-    fields += [T.StructField(c, T.StringType()) for c in dimension_cols]
-    fields += [
-        T.StructField("UOM", T.StringType()),
-        T.StructField("UOM_ID", T.StringType()),
-        T.StructField("SCALAR_FACTOR", T.StringType()),
-        T.StructField("SCALAR_ID", T.StringType()),
-        T.StructField("VECTOR", T.StringType()),
-        T.StructField("COORDINATE", T.StringType()),
-        T.StructField("VALUE", T.StringType()),
-        T.StructField("STATUS", T.StringType()),
-        T.StructField("SYMBOL", T.StringType()),
-        T.StructField("TERMINATED", T.StringType()),
-        T.StructField("DECIMALS", T.StringType()),
-    ]
-    return T.StructType(fields)
+    in file order, since the CSV reader maps columns by position (all
+    read as string; VALUE/DECIMALS typed after parse)."""
+    names = WDS_CORE_COLUMNS[:3] + list(dimension_cols) + WDS_CORE_COLUMNS[3:]
+    return T.StructType([T.StructField(c, T.StringType()) for c in names])
 
 
 def read_wds_csv(
@@ -97,16 +78,6 @@ def build_dimension(df: DataFrame, member_col: str, id_col: str = "member_id") -
         .distinct()
         .withColumn(id_col, F.dense_rank().over(w).cast("long"))
     )
-
-
-def latest_revision(
-    df: DataFrame, series_cols: list[str], order_cols: list[str]
-) -> DataFrame:
-    """Keep only the most recent revision per series key."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*series_cols).orderBy(*[F.desc(c) for c in order_cols])
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def vector_series(df: DataFrame) -> DataFrame:

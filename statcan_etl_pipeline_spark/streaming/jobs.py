@@ -10,14 +10,23 @@ Scale notes: watermarks bound the state store (without one, windowed
 state grows forever); `session_window` keeps session state per key and
 evicts on watermark; sink is `memory` only in tests — production uses
 kafka/parquet sinks with checkpointing.
+
+The foreachBatch sinks (latest-wins MERGE, additive running aggregate,
+SCD2 history) differ only in their fold; all of them commit through one
+versioned-commit protocol, `_commit_version`: immutable `v{batch_id}`
+version dirs, `_SUCCESS` as the commit record, a strictly-older base,
+replayed batches skipped, old versions garbage-collected.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.portable import cents, money_sum
+from ..operators.incremental import latest_revision, merge_latest_by, scd2_history, upsert
 
 
 def _with_event_time(stream: DataFrame, col: str = "ts") -> DataFrame:
@@ -60,11 +69,9 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = 
     )
 
 
-def purchases_after_views_join(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream interval join: purchases matched to same-user views
-    in the preceding hour. Watermarks on BOTH sides + the time-range
-    predicate bound the join state (without them, stream-stream joins
-    buffer forever)."""
+def _purchases_after_views(stream: DataFrame, watermark: str, how: str) -> DataFrame:
+    """Purchases joined (`how`) to same-user views in the preceding hour,
+    both sides watermarked."""
     stream = _with_event_time(stream)
     views = (
         stream.filter(F.col("event_type") == "view")
@@ -89,7 +96,16 @@ def purchases_after_views_join(stream: DataFrame, watermark: str = "2 hours") ->
         (F.col("p_user") == F.col("v_user"))
         & (F.col("v_ts") < F.col("p_ts"))
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
+        how,
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
+
+
+def purchases_after_views_join(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
+    """Stream-stream interval join: purchases matched to same-user views
+    in the preceding hour. Watermarks on BOTH sides + the time-range
+    predicate bound the join state (without them, stream-stream joins
+    buffer forever)."""
+    return _purchases_after_views(stream, watermark, "inner")
 
 
 def purchases_after_views_outer_join(
@@ -103,32 +119,7 @@ def purchases_after_views_outer_join(
     difference a pipeline must plan for vs the inner join. Both
     watermarks plus the time-range predicate bound the state exactly
     as in the inner variant."""
-    stream = _with_event_time(stream)
-    views = (
-        stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-            F.col("event_id").alias("view_id"),
-        )
-        .withWatermark("v_ts", watermark)
-    )
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", watermark)
-    )
-    return purchases.join(
-        views,
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") < F.col("p_ts"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
+    return _purchases_after_views(stream, watermark, "leftOuter")
 
 
 def run_available_now(
@@ -199,6 +190,59 @@ def read_merge_target(spark, target_path: str) -> DataFrame:
     return spark.read.parquet(f"{target_path}/{versions[-1]}")
 
 
+def _commit_version(
+    batch_df: DataFrame,
+    batch_id: int,
+    target_path: str,
+    fold: Callable[[DataFrame | None], DataFrame],
+    keep: int = 2,
+) -> bool:
+    """The one versioned-commit protocol of the foreachBatch sinks.
+    Micro-batch N writes `fold(base)` as a NEW immutable version dir
+    `{target}/v{N}` (zero-padded), where `base` is the newest committed
+    version strictly older than v{N} (None if there is none), then
+    keeps only the newest `keep` committed versions. Returns False,
+    writing nothing, if v{N} had already committed (checkpoint replay).
+
+    Replay safety (ADVICE r3): the base is resolved ONLY from versions
+    strictly OLDER than v{N}. Resolving "latest" would, on replay of an
+    already-committed batch, pick v{N} itself and then overwrite it in
+    place — Spark's overwrite deletes the target before the (lazy) read
+    finishes, so a crash mid-rewrite destroys the newest committed
+    version. With the strict-older rule a committed batch is a pure
+    no-op (additive folds never double-count) and an uncommitted one —
+    a half-written v{N} without `_SUCCESS` — folds from the same base
+    it would have used the first time."""
+    spark = batch_df.sparkSession
+    vname = f"v{batch_id:010d}"
+    # Resolve from committed versions only — a bare try/except read of
+    # the target would treat a TRANSIENT failure as "no target yet" and
+    # silently restart history.
+    versions = _committed_versions(spark, target_path)
+    if vname in versions:
+        return False  # replay of a committed batch: already folded in
+    older = [v for v in versions if v < vname]
+    base = spark.read.parquet(f"{target_path}/{older[-1]}") if older else None
+    fold(base).write.mode("overwrite").parquet(f"{target_path}/{vname}")
+    _gc_versions(spark, target_path, keep=keep)
+    return True
+
+
+def _drain_foreach_batch(
+    df: DataFrame, fn: Callable[[DataFrame, int], object], checkpoint_dir: str
+) -> None:
+    """Run `fn(batch_df, batch_id)` on every micro-batch of `df` until
+    the source is drained (availableNow), blocking. The checkpoint's
+    offset log is what replays an interrupted batch under the same id."""
+    q = (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+
 def merge_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -207,40 +251,18 @@ def merge_batch(
     order_col: str,
     retain_versions: int = 2,
 ) -> bool:
-    """Merge ONE micro-batch into the versioned parquet target; returns
-    True if a new version was written, False if the batch was already
-    committed (checkpoint replay) and the merge was skipped.
+    """Merge ONE micro-batch latest-wins into the versioned parquet
+    target; returns True if a new version was written, False if the
+    batch was already committed (checkpoint replay) and the merge was
+    skipped. Within the batch the highest `order_col` wins per key;
+    the batch then beats the base (`upsert`). Versioning and replay
+    safety: `_commit_version`."""
 
-    Replay safety (ADVICE r3): the base is resolved ONLY from versions
-    strictly OLDER than this batch's `v{batch_id}`. Resolving "latest"
-    would, on replay of an already-committed batch, pick v{batch_id}
-    itself and then overwrite it in place — Spark's overwrite deletes
-    the target before the (lazy) read finishes, so a crash mid-rewrite
-    destroys the newest committed version. With the strict-older rule a
-    committed batch is a pure no-op and an uncommitted one merges from
-    the same base it would have used the first time.
-    """
-    from ..operators.incremental import upsert
+    def fold(base: DataFrame | None) -> DataFrame:
+        latest = latest_revision(batch_df, keys, [order_col])
+        return latest if base is None else upsert(base, latest, keys=keys, order_col=order_col)
 
-    spark = batch_df.sparkSession
-    vname = f"v{batch_id:010d}"
-    vdir = f"{target_path}/{vname}"
-    # Resolve from committed versions only — a bare try/except read of
-    # the target would treat a TRANSIENT failure as "no target yet" and
-    # silently restart history.
-    versions = _committed_versions(spark, target_path)
-    if vname in versions:
-        return False  # replay of a committed batch: already merged
-    batch_latest = upsert(batch_df.limit(0), batch_df, keys=keys, order_col=order_col)
-    older = [v for v in versions if v < vname]
-    if older:
-        base = spark.read.parquet(f"{target_path}/{older[-1]}")
-        merged = upsert(base, batch_latest, keys=keys, order_col=order_col)
-    else:
-        merged = batch_latest
-    merged.write.mode("overwrite").parquet(vdir)
-    _gc_versions(spark, target_path, keep=retain_versions)
-    return True
+    return _commit_version(batch_df, batch_id, target_path, fold, keep=retain_versions)
 
 
 def _gc_versions(spark, target_path: str, keep: int = 2) -> None:
@@ -272,36 +294,21 @@ def run_foreach_batch_upsert(
     Structured Streaming reaches sinks/logic the streaming API can't
     express (multi-table writes, JDBC upserts, MERGE).
 
-    Durability: each merge writes a NEW immutable version dir
-    `{target}/v{batch_id}` and never rewrites a committed one, so a
-    crash at any point loses at most the in-flight version — a version
-    only counts once Spark's commit protocol drops its `_SUCCESS`
-    marker (written last), and readers (`read_merge_target`) resolve
-    the latest committed version. On checkpoint replay, a batch whose
-    version already committed is SKIPPED (never read-and-overwritten in
-    place — see `merge_batch`), so a crash mid-replay can't destroy the
-    newest committed version. A real lakehouse table (Delta/Iceberg
-    `MERGE INTO`) replaces this whole mechanism with one transaction;
-    the upsert semantics are identical (operators/incremental.upsert).
-    """
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        merge_batch(
-            batch_df,
-            batch_id,
-            target_path,
-            keys=keys,
-            order_col=order_col,
-            retain_versions=retain_versions,
-        )
-
-    q = (
-        df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    Durability: every batch commits a new immutable version through
+    `_commit_version` and readers (`read_merge_target`) resolve the
+    latest committed one, so a crash loses at most the in-flight version
+    and a replayed committed batch is skipped. A real lakehouse table
+    (Delta/Iceberg `MERGE INTO`) replaces this whole mechanism with one
+    transaction; the upsert semantics are identical
+    (operators/incremental.upsert)."""
+    _drain_foreach_batch(
+        df,
+        lambda batch_df, batch_id: merge_batch(
+            batch_df, batch_id, target_path,
+            keys=keys, order_col=order_col, retain_versions=retain_versions,
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def enriched_stream(
@@ -336,13 +343,7 @@ def incremental_agg_batch(
     BEFORE touching the base (map-side partial aggregation inside the
     micro-batch), and the base merge is a full-outer join on the group
     key between two |groups|-sized tables — the raw stream never joins
-    the base. The same versioned-commit mechanism as merge_batch makes
-    crash-replay safe."""
-    spark = batch_df.sparkSession
-    vname = f"v{batch_id:010d}"
-    versions = _committed_versions(spark, target_path)
-    if vname in versions:
-        return False
+    the base. Versioning and replay safety: `_commit_version`."""
     # State keeps the EXACT integer-cents sum (BIGINT): adding already
     # divided doubles batch-by-batch would drift by an ulp per merge
     # and diverge from the from-scratch batch aggregate. Divide on read.
@@ -350,31 +351,24 @@ def incremental_agg_batch(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(cents(value_col)).cast("long").alias("sum_cents"),
     )
-    older = [v for v in versions if v < vname]
-    if older:
-        base = spark.read.parquet(f"{target_path}/{older[-1]}")
-        part = (
-            base.select(
-                group_col,
-                F.col("n").alias("__bn"),
-                F.col("sum_cents").alias("__bs"),
-            )
+
+    def add(a: str, b: str):
+        return F.coalesce(F.col(a), F.lit(0)) + F.coalesce(F.col(b), F.lit(0))
+
+    def fold(base: DataFrame | None) -> DataFrame:
+        if base is None:
+            return part
+        return (
+            base.select(group_col, F.col("n").alias("__bn"), F.col("sum_cents").alias("__bs"))
             .join(part, group_col, "full_outer")
             .select(
                 group_col,
-                (
-                    F.coalesce(F.col("__bn"), F.lit(0))
-                    + F.coalesce(F.col("n"), F.lit(0))
-                ).alias("n"),
-                (
-                    F.coalesce(F.col("__bs"), F.lit(0))
-                    + F.coalesce(F.col("sum_cents"), F.lit(0))
-                ).cast("long").alias("sum_cents"),
+                add("__bn", "n").alias("n"),
+                add("__bs", "sum_cents").cast("long").alias("sum_cents"),
             )
         )
-    part.write.mode("overwrite").parquet(f"{target_path}/{vname}")
-    _gc_versions(spark, target_path)
-    return True
+
+    return _commit_version(batch_df, batch_id, target_path, fold)
 
 
 def run_foreach_batch_incremental_agg(
@@ -388,19 +382,13 @@ def run_foreach_batch_incremental_agg(
     per group across micro-batches — the incremental-materialized-view
     pattern for metrics a 100 TB stream can't re-aggregate from scratch
     per batch."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_agg_batch(
+    _drain_foreach_batch(
+        df,
+        lambda batch_df, batch_id: incremental_agg_batch(
             batch_df, batch_id, target_path, group_col=group_col, value_col=value_col
-        )
-
-    q = (
-        df.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def chained_windowed_max(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -476,57 +464,42 @@ def scd2_batch(
     batch folds in as: distinct (key, effective, value) union of the
     affected keys' existing versions + the batch rows, re-windowed by
     operators.incremental.scd2_history. Latest-wins on duplicate
-    (key, effective). Crash-replay safe via the same versioned-commit
-    protocol as merge_batch (committed batch => no-op)."""
-    from ..operators.incremental import merge_latest_by, scd2_history, upsert
-
-    spark = batch_df.sparkSession
-    vname = f"v{batch_id:010d}"
-    versions = _committed_versions(spark, target_path)
-    if vname in versions:
-        return False
+    (key, effective). Versioning and replay safety: `_commit_version`."""
     fresh_cols = [key_col, effective_col, value_col]
     if order_col and order_col not in fresh_cols:
         fresh_cols.append(order_col)  # tie-break among same-batch updates
     fresh = batch_df.select(*fresh_cols)
-    older = [v for v in versions if v < vname]
-    if older:
-        base = spark.read.parquet(f"{target_path}/{older[-1]}")
-        keys = fresh.select(key_col).distinct()
-        untouched = base.join(keys, key_col, "left_anti")
-        # the history PERSISTS order_col so cross-batch conflicts
-        # resolve by the data's own ordering (true latest-wins), not by
-        # micro-batch arrival order — a late-arriving older revision
-        # must NOT overwrite a newer one merged in a prior batch
-        affected_versions = base.join(keys, key_col, "left_semi").select(
-            *fresh_cols
-        )
-        if order_col:
-            # cross-batch conflicts resolve by the data's own order
-            # column, NOT by arrival order (see merge_latest_by)
-            merged = merge_latest_by(
-                affected_versions, fresh, keys=[key_col, effective_col],
-                order_col=order_col,
+    version_keys = [key_col, effective_col]
+    touched = fresh.select(key_col).distinct()
+
+    def fold(base: DataFrame | None) -> DataFrame:
+        if base is None:
+            merged = (
+                latest_revision(fresh, version_keys, [order_col])
+                if order_col
+                else fresh.dropDuplicates(version_keys)
             )
         else:
-            merged = upsert(
-                affected_versions, fresh, keys=[key_col, effective_col]
+            # the history PERSISTS order_col so cross-batch conflicts
+            # resolve by the data's own ordering (true latest-wins), not
+            # by micro-batch arrival order — a late-arriving older
+            # revision must NOT overwrite a newer one merged in a prior
+            # batch (see merge_latest_by)
+            affected_versions = base.join(touched, key_col, "left_semi").select(*fresh_cols)
+            merged = (
+                merge_latest_by(affected_versions, fresh, keys=version_keys, order_col=order_col)
+                if order_col
+                else upsert(affected_versions, fresh, keys=version_keys)
             )
         rebuilt = scd2_history(
             merged, keys=[key_col], effective_col=effective_col,
             open_end_value=open_end_value,
         ).select(*fresh_cols, "valid_from", "valid_to")
-        out = untouched.unionByName(rebuilt)
-    else:
-        out = scd2_history(
-            upsert(fresh.limit(0), fresh, keys=[key_col, effective_col],
-                   order_col=order_col),
-            keys=[key_col], effective_col=effective_col,
-            open_end_value=open_end_value,
-        ).select(*fresh_cols, "valid_from", "valid_to")
-    out.write.mode("overwrite").parquet(f"{target_path}/{vname}")
-    _gc_versions(spark, target_path)
-    return True
+        if base is None:
+            return rebuilt
+        return base.join(touched, key_col, "left_anti").unionByName(rebuilt)
+
+    return _commit_version(batch_df, batch_id, target_path, fold)
 
 
 def run_foreach_batch_scd2(
@@ -541,18 +514,12 @@ def run_foreach_batch_scd2(
     """foreachBatch sink maintaining an SCD2 dimension history across
     micro-batches — streaming upstream, type-2 history downstream,
     with per-key incremental valid_to maintenance."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        scd2_batch(
+    _drain_foreach_batch(
+        df,
+        lambda batch_df, batch_id: scd2_batch(
             batch_df, batch_id, target_path,
             key_col=key_col, effective_col=effective_col, value_col=value_col,
             order_col=order_col,
-        )
-
-    q = (
-        df.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()

@@ -22,6 +22,7 @@ from statcan_etl_pipeline_spark.sources.statcan_wds import (
     latest_revision,
     read_wds_csv,
     vector_series,
+    wds_schema,
 )
 
 
@@ -115,6 +116,25 @@ def test_wds_ingest_dimensions_and_series(spark):
         dup = df.union(df.limit(1).withColumn("value", F.lit(999.0)))
         latest = latest_revision(dup, ["vector", "ref_date"], ["value"])
         assert latest.count() == 5
+
+
+def test_wds_schema_is_file_column_order():
+    """The CSV reader maps columns by position, so the schema must list
+    them in the WDS file's order (the order perfbench's generator
+    writes): REF_DATE, GEO, DGUID, dimensions, then the rest."""
+    assert wds_schema(["Products"]).fieldNames() == [
+        "REF_DATE", "GEO", "DGUID", "Products", "UOM", "UOM_ID",
+        "SCALAR_FACTOR", "SCALAR_ID", "VECTOR", "COORDINATE", "VALUE",
+        "STATUS", "SYMBOL", "TERMINATED", "DECIMALS",
+    ]
+
+
+def test_wds_latest_revision_is_the_incremental_primitive():
+    """`statcan_wds.latest_revision` is a re-export of the one
+    top-row-per-key primitive, not a copy."""
+    from statcan_etl_pipeline_spark.operators import incremental
+
+    assert latest_revision is incremental.latest_revision
 
 
 def test_wds_prunes_columns_at_scan(spark):
@@ -347,7 +367,21 @@ def test_python_datasource_wds_writer_two_phase_commit(spark):
         assert {(r["vector"], r["value"]) for r in back.collect()} == {
             (v, val) for _, _, v, _, val, _ in rows1
         }
-        # append adds one more committed generation... overwrite replaces
+        # append adds one more committed generation next to the first:
+        # no committed part is replaced, _SUCCESS lists old + new parts
+        spark.createDataFrame(rows2, sch).write.format("wds_py").option(
+            "path", p
+        ).mode("append").save()
+        appended = open(os.path.join(p, "_SUCCESS")).read().splitlines()
+        assert appended[: len(committed)] == committed
+        assert len(appended) > len(committed)
+        assert sorted(f for f in os.listdir(p) if f.startswith("part-")) == sorted(appended)
+        back = read_committed_wds_csv(spark, p)
+        assert back.count() == len(rows1) + len(rows2)
+        assert {(r["vector"], r["value"]) for r in back.collect()} == {
+            (v, val) for _, _, v, _, val, _ in rows1 + rows2
+        }
+        # overwrite replaces every prior generation
         spark.createDataFrame(rows2, sch).write.format("wds_py").option(
             "path", p
         ).mode("overwrite").save()

@@ -3,6 +3,7 @@ batch twin on the same events data."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from statcan_etl_pipeline_spark.catalog import load_table, table_path
@@ -10,7 +11,10 @@ from statcan_etl_pipeline_spark.operators.temporal import sessionize
 from statcan_etl_pipeline_spark.registry import QUERIES
 from statcan_etl_pipeline_spark.streaming.jobs import (
     events_stream,
+    incremental_agg_batch,
+    merge_batch,
     run_available_now,
+    scd2_batch,
     session_counts,
     windowed_counts,
 )
@@ -297,23 +301,53 @@ def test_merge_batch_replay_of_committed_batch_is_skipped(spark, tmp_path):
     )
 
 
-def test_merge_batch_uncommitted_replay_uses_strictly_older_base(spark, tmp_path):
-    """If batch N crashed BEFORE its _SUCCESS marker, replay must merge
-    from the newest version strictly older than v{N} — not from any
-    half-written v{N} content."""
+# Per sink: (call, batch schema, batch 0 rows, batch 1 rows, read-back
+# columns, expected rows after batch 1 folds onto batch 0).
+_REPLAY_CASES = {
+    "merge_batch": (
+        lambda b, i, t: merge_batch(b, i, t, keys=["user_id"], order_col="event_id"),
+        "user_id int, event_id int, v string",
+        [(1, 10, "a"), (2, 11, "b")],
+        [(2, 20, "b2")],
+        ["user_id", "event_id", "v"],
+        [(1, 10, "a"), (2, 20, "b2")],
+    ),
+    "incremental_agg_batch": (
+        incremental_agg_batch,
+        "event_type string, value double",
+        [("view", 1.0), ("buy", 2.5)],
+        [("buy", 0.5)],
+        ["event_type", "n", "sum_cents"],
+        [("buy", 2, 300), ("view", 1, 100)],
+    ),
+    "scd2_batch": (
+        scd2_batch,
+        "user_id int, ref_date string, value double",
+        [(1, "2024-01-01", 1.0), (2, "2024-01-01", 5.0)],
+        [(2, "2024-02-01", 6.0)],
+        ["user_id", "ref_date", "value", "valid_from", "valid_to"],
+        [
+            (1, "2024-01-01", 1.0, "2024-01-01", "9999-12-31"),
+            (2, "2024-01-01", 5.0, "2024-01-01", "2024-02-01"),
+            (2, "2024-02-01", 6.0, "2024-02-01", "9999-12-31"),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", list(_REPLAY_CASES))
+def test_uncommitted_replay_uses_strictly_older_base(spark, tmp_path, sink):
+    """If batch N crashed BEFORE its _SUCCESS marker, replay must fold
+    onto the newest version strictly older than v{N} — not onto any
+    half-written v{N} content. Holds for every foreachBatch sink, since
+    they share one commit protocol."""
     import os
 
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        merge_batch,
-        read_merge_target,
-    )
+    from statcan_etl_pipeline_spark.streaming.jobs import read_merge_target
 
+    call, schema, rows0, rows1, cols, want = _REPLAY_CASES[sink]
     target = str(tmp_path / "t")
-    b0 = spark.createDataFrame(
-        [(1, 10, "a"), (2, 11, "b")], "user_id int, event_id int, v string"
-    )
-    b1 = spark.createDataFrame([(2, 20, "b2")], "user_id int, event_id int, v string")
-    assert merge_batch(b0, 0, target, keys=["user_id"], order_col="event_id")
+    assert call(spark.createDataFrame(rows0, schema), 0, target)
 
     # simulate a crash mid-write of v1: dir exists with junk, no _SUCCESS
     vdir = f"{target}/v{1:010d}"
@@ -321,14 +355,9 @@ def test_merge_batch_uncommitted_replay_uses_strictly_older_base(spark, tmp_path
     with open(os.path.join(vdir, "part-junk.parquet"), "w") as fh:
         fh.write("not parquet")
 
-    assert merge_batch(b1, 1, target, keys=["user_id"], order_col="event_id")
-    got = sorted(
-        tuple(r)
-        for r in read_merge_target(spark, target)
-        .select("user_id", "event_id", "v")
-        .collect()
-    )
-    assert got == [(1, 10, "a"), (2, 20, "b2")]
+    assert call(spark.createDataFrame(rows1, schema), 1, target)
+    got = sorted(tuple(r) for r in read_merge_target(spark, target).select(*cols).collect())
+    assert got == want
 
 
 def test_stream_static_enrichment_matches_batch(spark, sf_small):
