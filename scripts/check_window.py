@@ -15,6 +15,13 @@ hashes therefore fold in the source of every module-level helper the
 query (transitively) references, plus referenced module-level constants,
 so helper rewrites move every consumer's hash.
 
+Hashes do not depend on where the repo is checked out: the planted
+queries' oracles embed an absolute fixture path (queries/planted.py,
+GATE_PLANTED_DIR), so the repo root is replaced by a fixed token in
+every blob before hashing. A query named in the manifest but no longer
+registered fails the check, so a move that drops a function cannot
+pass.
+
 Usage:
     python scripts/check_window.py --snapshot   # at end of round: record
         per-query hashes (v2: body + referenced helpers/constants +
@@ -34,11 +41,13 @@ import os
 import sys
 import textwrap
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 MANIFEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "query_hashes.json")
 
 HASH_VERSION = 2
+REPO_TOKEN = "<repo>"
 
 
 def _referenced_closure(fn) -> str:
@@ -99,6 +108,7 @@ def _current_hashes(
         blob = src + "\n--oracle--\n" + ORACLES.get(name, "")
         if version >= 2:
             blob += "\n--closure--\n" + _referenced_closure(fn)
+        blob = blob.replace(REPO, REPO_TOKEN)
         out[name] = hashlib.md5(blob.encode()).hexdigest()
         mod = getattr(fn, "__module__", None)
         if mod:
@@ -117,9 +127,7 @@ def _window() -> list[str]:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "__spark_entry__.py"),
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
@@ -161,6 +169,7 @@ def main() -> int:
     changed = sorted(
         name for name, h in cur.items() if base.get(name) != h
     )
+    vanished = sorted(set(base) - set(cur))
     win = set(_window())
     outside = [name for name in changed if name not in win]
     print(f"changed/new queries since snapshot: {len(changed)}")
@@ -186,6 +195,15 @@ def main() -> int:
                 f"{unverified} — triage (shared-helper edit?) or rotate "
                 f"them in"
             )
+    for name in vanished:
+        print(f"  {name}: VIOLATION (in the manifest but no longer registered)")
+    if vanished:
+        print(
+            f"\nFAIL: {len(vanished)} snapshotted queries are no longer "
+            "registered — restore them, or re-snapshot if the removal is "
+            "deliberate.",
+            file=sys.stderr,
+        )
     if outside:
         print(
             f"\nFAIL: {len(outside)} changed queries are outside the driver "
@@ -193,6 +211,7 @@ def main() -> int:
             "inside the first 50.",
             file=sys.stderr,
         )
+    if outside or vanished:
         return 1
     print("OK: every changed query is inside the driver window.")
     return 0

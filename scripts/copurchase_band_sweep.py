@@ -27,8 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from statcan_etl_pipeline_spark.registry import QUERIES  # noqa: E402,F401  (loads all query modules first — direct analytics3 import would hit the registry's circular-load guard)
-from statcan_etl_pipeline_spark.queries.analytics3 import (  # noqa: E402
+from statcan_etl_pipeline_spark.registry import QUERIES  # noqa: E402,F401  (loads all query modules first — direct graph import would hit the registry's circular-load guard)
+from statcan_etl_pipeline_spark.queries.graph import (  # noqa: E402
     _banded_similarity,
     _copurchase_edges,
     _SIM_BUCKET_CAP,
@@ -51,7 +51,7 @@ def _candidates(spark, sf_dir, n_hashes):
     registered query; the r13 sweep numbers in SCALING.md were taken
     with the md5-string family)."""
     from statcan_etl_pipeline_spark.operators.dedup import lsh_pairs_from_index
-    from statcan_etl_pipeline_spark.queries.analytics3 import _sim_banded_index
+    from statcan_etl_pipeline_spark.queries.graph import _sim_banded_index
 
     edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = (

@@ -452,7 +452,7 @@ def exp_part_label_propagation_communities(ctx: Ctx) -> pd.DataFrame:
 def _copurchase_stage_tables(ctx: Ctx) -> None:
     if getattr(ctx, "_copurchase_staged", False):
         return
-    from statcan_etl_pipeline_spark.queries.analytics3 import (
+    from statcan_etl_pipeline_spark.queries.graph import (
         _SIM_HUB_CAP,
         _SIM_KM_PRIME,
         _SIM_N_HASHES,
@@ -480,7 +480,7 @@ FROM (SELECT u AS node, v AS nbr FROM cop_edges
 JOIN cop_deg ON cop_deg.node = a.node
 WHERE cop_deg.d <= {_SIM_HUB_CAP}"""
     )
-    # r14 KM scheme (queries/analytics3._sim_banded_index): one md5 per
+    # r14 KM scheme (queries/graph._sim_banded_index): one md5 per
     # shingle, mh_k = min((a_k·h + b_k) % P) as BIGINT — same constants,
     # same arithmetic, staged with the same hash-partition pass machinery
     # (BIGINT agg state is ~8× slimmer than the r13 192-string version,
@@ -512,7 +512,7 @@ WHERE cop_deg.d <= {_SIM_HUB_CAP}"""
 
 
 def _copurchase_bands_sql() -> str:
-    from statcan_etl_pipeline_spark.queries.analytics3 import (
+    from statcan_etl_pipeline_spark.queries.graph import (
         _SIM_BAND_ROWS,
         _SIM_KM_PRIME,
         _SIM_N_HASHES,
@@ -528,7 +528,7 @@ def _copurchase_bands_sql() -> str:
 
 
 def exp_copurchase_part_similarity(ctx: Ctx) -> pd.DataFrame:
-    from statcan_etl_pipeline_spark.queries.analytics3 import _SIM_BUCKET_CAP
+    from statcan_etl_pipeline_spark.queries.graph import _SIM_BUCKET_CAP
 
     _copurchase_stage_tables(ctx)
     df = ctx.con.execute(
@@ -567,7 +567,7 @@ ORDER BY part_x, part_y
 
 
 def exp_copurchase_band_census(ctx: Ctx) -> pd.DataFrame:
-    from statcan_etl_pipeline_spark.queries.analytics3 import _SIM_BUCKET_CAP
+    from statcan_etl_pipeline_spark.queries.graph import _SIM_BUCKET_CAP
 
     _copurchase_stage_tables(ctx)
     return ctx.con.execute(
@@ -594,10 +594,10 @@ ORDER BY bucket_size
 def exp_copurchase_minhash_calibration(ctx: Ctx) -> pd.DataFrame:
     """r14: the KM estimator-quality report from the SAME staged
     cop_sig/cop_small tables — agree count via the balanced CASE-sum
-    (analytics3._balanced_sum, DuckDB binder-depth safe), micro-unit
+    (graph._balanced_sum, DuckDB binder-depth safe), micro-unit
     integer sums, floor bucketing; mirrors the registered oracle with
     the single-statement sig agg replaced by the staged table."""
-    from statcan_etl_pipeline_spark.queries.analytics3 import (
+    from statcan_etl_pipeline_spark.queries.graph import (
         _SIM_BUCKET_CAP,
         _SIM_N_HASHES,
         _balanced_sum,

@@ -34,6 +34,16 @@ def sql_round(expr: str, n: int = 2) -> str:
     )
 
 
+# --- shared SQL type and expression strings ---------------------------------
+# The exact integer type that moment and cent sums widen to before any
+# division, on both engines: a Spark `Column.cast` type string and a
+# DuckDB SQL type (DECIMAL(38,0) holds what an int64 sum can overflow).
+SQL_EXACT_INT = "decimal(38,0)"
+# TPC-H line revenue in SQL, the oracle twin of
+# F.col("l_extendedprice") * (1 - F.col("l_discount")).
+REV_SQL = "l_extendedprice * (1 - l_discount)"
+
+
 # --- exact fixed-point aggregation -----------------------------------------
 # Rounding alone can't make a float SUM portable: the accumulation ORDER
 # differs between engines (Spark partial aggregates vs DuckDB's), so the

@@ -16,6 +16,86 @@ from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
+def _asof_union(
+    left: DataFrame, right: DataFrame, on: list[str], left_ts: str, right_ts: str
+) -> tuple[DataFrame, list[str], list[str]]:
+    """The one union every as-of direction carries over: right rows
+    (``__src`` = 0) hold their payload as the struct ``__rv`` (right_ts
+    first), left rows (``__src`` = 1) a NULL ``__rv`` plus their own
+    columns. Returns (union, left payload columns, right payload
+    columns)."""
+    lcols = [c for c in left.columns if c not in on and c != left_ts]
+    rcols = [c for c in right.columns if c not in on and c != right_ts]
+    rsel = right.select(
+        *on,
+        F.col(right_ts).alias("__ts"),
+        F.lit(0).alias("__src"),
+        F.struct(*[F.col(c) for c in [right_ts, *rcols]]).alias("__rv"),
+    )
+    null_rv = F.lit(None).cast(rsel.schema["__rv"].dataType)
+    lsel = left.select(
+        *on,
+        F.col(left_ts).alias("__ts"),
+        F.lit(1).alias("__src"),
+        null_rv.alias("__rv"),
+        *[F.col(c) for c in lcols],
+    )
+    rsel = rsel.select(
+        *on,
+        "__ts",
+        "__src",
+        "__rv",
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
+    )
+    return lsel.unionByName(rsel), lcols, rcols
+
+
+def _carry_backward(on: list[str]) -> Column:
+    """Last right row at or before each row's timestamp: right rows
+    (src=0) sort BEFORE same-ts left rows so the (-inf, current] frame
+    sees exact-timestamp matches; same-ts right rows resolve to the
+    greatest struct."""
+    w = (
+        W.partitionBy(*on)
+        .orderBy(F.asc("__ts"), F.asc("__src"), F.asc_nulls_first("__rv"))
+        .rowsBetween(W.unboundedPreceding, 0)
+    )
+    return F.last("__rv", ignorenulls=True).over(w)
+
+
+def _carry_forward(on: list[str]) -> Column:
+    """First right row at or after each row's timestamp: left rows
+    (src=1) sort BEFORE same-ts right rows so the [current, +inf) frame
+    sees exact-timestamp matches; same-ts right rows resolve to the
+    smallest struct."""
+    w = (
+        W.partitionBy(*on)
+        .orderBy(F.asc("__ts"), F.desc("__src"), F.asc_nulls_first("__rv"))
+        .rowsBetween(0, W.unboundedFollowing)
+    )
+    return F.first("__rv", ignorenulls=True).over(w)
+
+
+def _asof_select(
+    carried: DataFrame,
+    on: list[str],
+    left_ts: str,
+    right_ts: str,
+    lcols: list[str],
+    rcols: list[str],
+    right_prefix: str,
+) -> DataFrame:
+    """Keep the left rows of a carried union and unpack their ``__match``
+    struct into prefixed right columns."""
+    return carried.filter(F.col("__src") == 1).select(
+        *on,
+        F.col("__ts").alias(left_ts),
+        *[F.col(c) for c in lcols],
+        F.col(f"__match.{right_ts}").alias(f"{right_prefix}{right_ts}"),
+        *[F.col(f"__match.{c}").alias(f"{right_prefix}{c}") for c in rcols],
+    )
+
+
 def asof_join_backward(
     left: DataFrame,
     right: DataFrame,
@@ -32,44 +112,9 @@ def asof_join_backward(
     (struct-lexicographic) — deterministic.
     """
     on = list(on)
-    lcols = [c for c in left.columns if c not in on and c != left_ts]
-    rcols = [c for c in right.columns if c not in on and c != right_ts]
-
-    rsel = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__src"),
-        F.struct(*[F.col(c) for c in [right_ts, *rcols]]).alias("__rv"),
-    )
-    null_rv = F.lit(None).cast(rsel.schema["__rv"].dataType)
-    lsel = left.select(
-        *on,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__src"),
-        null_rv.alias("__rv"),
-        *[F.col(c) for c in lcols],
-    )
-    rsel = rsel.select(*on, "__ts", "__src", "__rv", *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols])
-
-    unioned = lsel.unionByName(rsel)
-    w = (
-        W.partitionBy(*on)
-        .orderBy(F.asc("__ts"), F.asc("__src"), F.asc_nulls_first("__rv"))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    carried = F.last("__rv", ignorenulls=True).over(w)
-    out = (
-        unioned.withColumn("__match", carried)
-        .filter(F.col("__src") == 1)
-        .select(
-            *on,
-            F.col("__ts").alias(left_ts),
-            *[F.col(c) for c in lcols],
-            F.col(f"__match.{right_ts}").alias(f"{right_prefix}{right_ts}"),
-            *[F.col(f"__match.{c}").alias(f"{right_prefix}{c}") for c in rcols],
-        )
-    )
-    return out
+    unioned, lcols, rcols = _asof_union(left, right, on, left_ts, right_ts)
+    carried = unioned.withColumn("__match", _carry_backward(on))
+    return _asof_select(carried, on, left_ts, right_ts, lcols, rcols, right_prefix)
 
 
 def sessionize(
@@ -123,50 +168,9 @@ def asof_join_forward(
     join blowup).
     """
     on = list(on)
-    lcols = [c for c in left.columns if c not in on and c != left_ts]
-    rcols = [c for c in right.columns if c not in on and c != right_ts]
-
-    rsel = right.select(
-        *on,
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__src"),
-        F.struct(*[F.col(c) for c in [right_ts, *rcols]]).alias("__rv"),
-    )
-    null_rv = F.lit(None).cast(rsel.schema["__rv"].dataType)
-    lsel = left.select(
-        *on,
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__src"),
-        null_rv.alias("__rv"),
-        *[F.col(c) for c in lcols],
-    )
-    rsel = rsel.select(
-        *on,
-        "__ts",
-        "__src",
-        "__rv",
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
-    )
-    unioned = lsel.unionByName(rsel)
-    # left rows (src=1) sort BEFORE same-ts right rows (src=0) so the
-    # [current, +inf) frame sees exact-timestamp matches
-    w = (
-        W.partitionBy(*on)
-        .orderBy(F.asc("__ts"), F.desc("__src"), F.asc_nulls_first("__rv"))
-        .rowsBetween(0, W.unboundedFollowing)
-    )
-    carried = F.first("__rv", ignorenulls=True).over(w)
-    return (
-        unioned.withColumn("__match", carried)
-        .filter(F.col("__src") == 1)
-        .select(
-            *on,
-            F.col("__ts").alias(left_ts),
-            *[F.col(c) for c in lcols],
-            F.col(f"__match.{right_ts}").alias(f"{right_prefix}{right_ts}"),
-            *[F.col(f"__match.{c}").alias(f"{right_prefix}{c}") for c in rcols],
-        )
-    )
+    unioned, lcols, rcols = _asof_union(left, right, on, left_ts, right_ts)
+    carried = unioned.withColumn("__match", _carry_forward(on))
+    return _asof_select(carried, on, left_ts, right_ts, lcols, rcols, right_prefix)
 
 
 def asof_join_nearest(
@@ -179,31 +183,19 @@ def asof_join_nearest(
 ) -> DataFrame:
     """For each left row, attach the CLOSEST right row in time within
     the same key (pandas merge_asof(direction='nearest')); exact ties
-    prefer the backward (earlier-or-equal) match. Built from the
-    backward and forward passes over one union — the two windows share
-    the partitioning, so Catalyst plans one exchange + two sorts.
-
-    Requires left rows to be unique on (on, left_ts, payload) — the
-    back/forward recombination joins on those columns, so fully
-    duplicated left rows would multiply. Dedupe first if needed."""
+    prefer the backward (earlier-or-equal) match. Both the backward and
+    the forward match are carried over ONE union — the two windows share
+    the partitioning, so Catalyst plans one exchange + two sorts — and
+    each left row picks between them in place, with no join, so
+    duplicated left rows stay one output row each."""
     on = list(on)
-    back = asof_join_backward(left, right, on, left_ts, right_ts, "__b_").alias("b")
-    fwd = asof_join_forward(left, right, on, left_ts, right_ts, "__f_").alias("f")
-    lcols = [c for c in left.columns if c not in on and c != left_ts]
-    rcols = [c for c in right.columns if c not in on and c != right_ts]
-    join_keys = on + [left_ts] + lcols
-    # null-SAFE equality on every recombination key: a NULL payload
-    # column must not drop the left row (plain = would)
-    cond = None
-    for c in join_keys:
-        eq = F.col(f"b.{c}").eqNullSafe(F.col(f"f.{c}"))
-        cond = eq if cond is None else cond & eq
-    both = back.join(fwd, cond)
-    b_ts, f_ts = F.col(f"b.__b_{right_ts}"), F.col(f"f.__f_{right_ts}")
+    unioned, lcols, rcols = _asof_union(left, right, on, left_ts, right_ts)
+    b, f = F.col("__b"), F.col("__f")
+    b_ts, f_ts = b[right_ts], f[right_ts]
     # microsecond precision: whole-second unix_timestamp would misrank
     # sub-second gaps (and the events testdata carries nanos); cast
     # guards against TIMESTAMP_NTZ input (Spark 4 parquet default)
-    lt_us = F.unix_micros(F.col(f"b.{left_ts}").cast("timestamp"))
+    lt_us = F.unix_micros(F.col("__ts").cast("timestamp"))
     take_back = F.when(b_ts.isNull(), F.lit(False)).otherwise(
         f_ts.isNull()
         | (
@@ -211,14 +203,9 @@ def asof_join_nearest(
             <= F.unix_micros(f_ts.cast("timestamp")) - lt_us
         )
     )
-    sel = [F.col(f"b.{c}").alias(c) for c in join_keys]
-    sel.append(
-        F.when(take_back, b_ts).otherwise(f_ts).alias(f"{right_prefix}{right_ts}")
+    carried = (
+        unioned.withColumn("__b", _carry_backward(on))
+        .withColumn("__f", _carry_forward(on))
+        .withColumn("__match", F.when(take_back, b).otherwise(f))
     )
-    for c in rcols:
-        sel.append(
-            F.when(take_back, F.col(f"b.__b_{c}"))
-            .otherwise(F.col(f"f.__f_{c}"))
-            .alias(f"{right_prefix}{c}")
-        )
-    return both.select(*sel)
+    return _asof_select(carried, on, left_ts, right_ts, lcols, rcols, right_prefix)

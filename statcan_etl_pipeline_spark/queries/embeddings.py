@@ -1,4 +1,7 @@
-"""Embedding-column profiling (round 2): per-label norm statistics.
+"""Embedding-column profiling: per-label norm statistics, per-dimension
+calibration stats (the input to scalar quantization / clipping
+decisions), and scalar-quantization error curves (how many bits does
+this embedding table actually need?).
 
 A vector store ingesting 100 TB of embeddings needs cheap corpus
 profiling (dimension sanity, norm distribution per label/partition)
@@ -6,7 +9,10 @@ before any ANN indexing. Norms reuse the fixed-point dot product from
 functions/vectors.py, so every per-vector norm double is bit-identical
 across engines; the per-label average is computed from an exact
 micro-unit integer sum (never an average of raw doubles — accumulation
-order would flip the hash; see functions/portable.py).
+order would flip the hash; see functions/portable.py). Dimension stats
+shuffle only (dim → 64 keys) after map-side partial aggregation; all
+moment sums are exact fixed-point integers so cross-engine doubles are
+bit-identical.
 """
 
 from __future__ import annotations
@@ -15,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, scatter
-from ..functions.portable import pround, sql_round as R
+from ..functions.portable import SQL_EXACT_INT as _DEC, pround, sql_round as R
 from ..functions.vectors import (
     dot_fixed,
     sqdist_fixed,
@@ -499,3 +505,171 @@ def embedding_interclass_similarity(spark: SparkSession, sf_dir: str) -> DataFra
         )
         .orderBy("label_a", "label_b")
     )
+
+
+# ---------------------------------------------------------------------------
+# Per-dimension embedding calibration stats (n, mean, std, min, max
+# per coordinate) — what a scalar-quantizer or clipping pass reads
+# first. Values are quantized to 1e-9 fixed point per element (the
+# vectors.py convention) so Σq and Σq² are exact integers; mean and
+# population std are single double divisions at the end.
+# ---------------------------------------------------------------------------
+
+_Q = (
+    "CASE WHEN x >= 0 THEN CAST(floor(x * 1000000000.0 + 0.5) AS BIGINT) "
+    "ELSE -CAST(floor((-x) * 1000000000.0 + 0.5) AS BIGINT) END"
+)
+
+
+@query(
+    "embedding_dim_stats",
+    oracle=f"""
+WITH ex AS (
+  SELECT i - 1 AS dim, CAST(embedding[i] AS DOUBLE) AS x
+  FROM embeddings, unnest(range(1, len(embedding) + 1)) AS t(i)
+), q AS (
+  SELECT dim, x, {_Q} AS qx FROM ex
+), g AS (
+  SELECT CAST(dim AS BIGINT) AS dim,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(CAST(qx AS HUGEINT)) AS HUGEINT) AS sq,
+         CAST(sum(CAST(qx AS HUGEINT) * qx) AS HUGEINT) AS sq2,
+         min(x) AS mn, max(x) AS mx
+  FROM q GROUP BY dim
+)
+SELECT dim, n,
+       {R("CAST(sq AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000000.0)", 6)} AS mean,
+       {R("sqrt(CAST(n * sq2 - sq * sq AS DOUBLE)) / (CAST(n AS DOUBLE) * 1000000000.0)", 6)} AS std,
+       {R("mn", 6)} AS vmin,
+       {R("mx", 6)} AS vmax
+FROM g
+""",
+)
+def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    ex = emb.select(F.posexplode("embedding").alias("dim", "xf")).select(
+        F.col("dim").cast("long").alias("dim"), F.col("xf").cast("double").alias("x")
+    )
+    x = F.col("x")
+    qx = (
+        F.when(x >= 0, F.floor(x * F.lit(1e9) + F.lit(0.5)))
+        .otherwise(-F.floor((-x) * F.lit(1e9) + F.lit(0.5)))
+        .cast("long")
+    )
+    g = ex.groupBy("dim").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(qx.cast(_DEC)).alias("sq"),
+        F.sum((qx * qx).cast(_DEC)).alias("sq2"),
+        F.min(x).alias("mn"),
+        F.max(x).alias("mx"),
+    )
+    n_d = F.col("n").cast("double")
+    return g.select(
+        "dim",
+        "n",
+        pround(F.col("sq").cast("double") / (n_d * F.lit(1e9)), 6).alias("mean"),
+        pround(
+            F.sqrt(
+                (F.col("n") * F.col("sq2") - F.col("sq") * F.col("sq")).cast("double")
+            )
+            / (n_d * F.lit(1e9)),
+            6,
+        ).alias("std"),
+        pround(F.col("mn"), 6).alias("vmin"),
+        pround(F.col("mx"), 6).alias("vmax"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Scalar-quantization error curve: reconstruct every embedding at
+# 4/6/8 bits per dimension (per-dimension min/max ranges — exactly the
+# calibration embedding_dim_stats reports) and measure reconstruction
+# MSE. Codes are exact integers (floor of identical doubles); each
+# element's squared error is re-quantized to 1e-12 fixed point so the
+# corpus sum is exact — the bits-vs-quality table is engine-exact.
+# Dimension ranges are a 64-row broadcast; everything else is one
+# linear pass per bit width.
+# ---------------------------------------------------------------------------
+
+_SQ_BITS = (4, 6, 8)
+
+
+def _sq_err_sql(bits: int) -> str:
+    scale = (1 << bits) - 1
+    code = (
+        f"CAST(floor((CAST(e.embedding[t.i] AS DOUBLE) - r.mn)"
+        f" / (r.mx - r.mn) * {scale}.0 + 0.5) AS BIGINT)"
+    )
+    recon = f"(r.mn + CAST({code} AS DOUBLE) * (r.mx - r.mn) / {scale}.0)"
+    d = f"(CAST(e.embedding[t.i] AS DOUBLE) - {recon})"
+    return f"CAST(floor({d} * {d} * 1000000000000.0 + 0.5) AS HUGEINT)"
+
+
+def _sq_oracle() -> str:
+    branches = " UNION ALL ".join(
+        f"""
+SELECT CAST({bits} AS BIGINT) AS bits,
+       CAST(count(*) AS BIGINT) AS n_values,
+       CAST(sum({_sq_err_sql(bits)}) AS HUGEINT) AS err_pico
+FROM embeddings e
+CROSS JOIN range(1, 65) t(i)
+JOIN rng r ON r.dim = t.i
+WHERE r.mx > r.mn"""
+        for bits in _SQ_BITS
+    )
+    return f"""
+WITH rng AS (
+  SELECT i AS dim, min(CAST(embedding[i] AS DOUBLE)) AS mn,
+         max(CAST(embedding[i] AS DOUBLE)) AS mx
+  FROM embeddings CROSS JOIN range(1, 65) t(i)
+  GROUP BY i
+)
+SELECT bits, n_values,
+       {R("CAST(err_pico AS DOUBLE) / 1000000000000.0 / CAST(n_values AS DOUBLE)", 9)}
+         AS mse
+FROM ({branches})
+ORDER BY bits
+"""
+
+
+@query("embedding_sq_error_curve", oracle=_sq_oracle())
+def embedding_sq_error_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    ex = emb.select(F.posexplode("embedding").alias("dim0", "xf")).select(
+        (F.col("dim0") + 1).alias("dim"), F.col("xf").cast("double").alias("x")
+    )
+    rng = ex.groupBy("dim").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
+    base = ex.join(F.broadcast(rng), "dim").filter(F.col("mx") > F.col("mn"))
+
+    outs = []
+    for bits in _SQ_BITS:
+        scale = float((1 << bits) - 1)
+        code = F.floor(
+            (F.col("x") - F.col("mn")) / (F.col("mx") - F.col("mn")) * F.lit(scale)
+            + F.lit(0.5)
+        ).cast("long")
+        recon = F.col("mn") + code.cast("double") * (
+            F.col("mx") - F.col("mn")
+        ) / F.lit(scale)
+        d = F.col("x") - recon
+        err_pico = F.floor(d * d * F.lit(1e12) + F.lit(0.5)).cast(_DEC)
+        outs.append(
+            base.agg(
+                F.lit(bits).cast("long").alias("bits"),
+                F.count(F.lit(1)).cast("long").alias("n_values"),
+                F.sum(err_pico).alias("err_pico"),
+            )
+        )
+    un = outs[0]
+    for o in outs[1:]:
+        un = un.unionByName(o)
+    return un.select(
+        "bits",
+        "n_values",
+        pround(
+            F.col("err_pico").cast("double")
+            / F.lit(1e12)
+            / F.col("n_values").cast("double"),
+            9,
+        ).alias("mse"),
+    ).orderBy("bits")

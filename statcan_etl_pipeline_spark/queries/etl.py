@@ -1,6 +1,11 @@
 """ETL-layer queries: the declarative pipeline runner demo and the
 StatCan-WDS-shaped surface (vector time series, latest-revision dedup,
-period-over-period change) — re-expressed over the testdata tables."""
+period-over-period change) — re-expressed over the testdata tables —
+plus the data-profiling and audit operators a production pipeline runs
+constantly: an ANALYZE-style column profiler, an exact mode profile,
+join-key skew diagnostics, a tax-rate audit, and supplier-name entity
+resolution pairs.
+"""
 
 from __future__ import annotations
 
@@ -9,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import (
+    REV_SQL,
     cents,
     money_sum,
     pround,
@@ -16,10 +22,9 @@ from ..functions.portable import (
     sql_money_sum as MS,
     sql_round as R,
 )
+from ..operators.resolution import fastss_pairs
 from ..plans.pipeline import run_pipeline
 from ..registry import query
-
-REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 
 # ---------------------------------------------------------------------------
@@ -879,4 +884,301 @@ def statcan_chain_linked_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("m", "yyyy-MM").alias("ref_month"), "segment", "index_val"
         )
         .orderBy("ref_month")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Entity resolution: all supplier-name pairs within edit distance 1,
+# generated with FastSS deletion-neighborhood blocking (see
+# operators/resolution.py) — an equi-join on deletion variants, never
+# a cross join. The DuckDB oracle IS the naive quadratic definition
+# (cross join + levenshtein), so parity proves the blocked plan loses
+# no pair. At 100 TB the Spark side's candidate count stays bounded
+# per variant bucket; the oracle's cross join is viable only because
+# oracle inputs are small by design.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "er_supplier_name_pairs",
+    oracle="""
+SELECT a.s_suppkey AS a_id, b.s_suppkey AS b_id,
+       a.s_name AS a_name, b.s_name AS b_name,
+       CAST(levenshtein(a.s_name, b.s_name) AS INTEGER) AS dist
+FROM supplier a
+JOIN supplier b ON a.s_suppkey < b.s_suppkey
+WHERE levenshtein(a.s_name, b.s_name) <= 1
+ORDER BY a_id, b_id
+""",
+)
+def er_supplier_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sup = load_table(spark, sf_dir, "supplier")
+    pairs = fastss_pairs(sup, id_col="s_suppkey", name_col="s_name", max_dist=1)
+    return pairs.select(
+        "a_id", "b_id", "a_name", "b_name", F.col("dist").cast("int").alias("dist")
+    ).orderBy("a_id", "b_id")
+
+
+# ---------------------------------------------------------------------------
+# Join-key skew report: the pre-flight diagnostic you run BEFORE
+# shuffling 100 TB on a key — rows, distinct keys, the heaviest key
+# and its share, and the max/avg skew ratio for the three hottest join
+# keys in the schema. One groupBy per key (partial-aggregatable) plus
+# a single-row argmax agg via max(struct(cnt, -key)) — deterministic
+# (smallest key wins ties), no windows, no second pass over the fact
+# table. skew_ratio ≫ 1 is the signal to slat/AQE the join.
+# ---------------------------------------------------------------------------
+
+_SKEW_ORACLE_ONE = """
+SELECT '{label}' AS key_name,
+       CAST((SELECT count(*) FROM {tbl}) AS BIGINT) AS n_rows,
+       CAST(count(*) AS BIGINT) AS n_keys,
+       CAST(max(cnt) AS BIGINT) AS max_per_key,
+       (SELECT min(k) FROM (SELECT {key} AS k, count(*) AS c FROM {tbl} GROUP BY {key})
+        WHERE c = (SELECT max(c) FROM (SELECT count(*) AS c FROM {tbl} GROUP BY {key}))) AS hot_key,
+       {avg_expr} AS avg_per_key,
+       {skew_expr} AS skew_ratio
+FROM (SELECT {key}, count(*) AS cnt FROM {tbl} GROUP BY {key})
+"""
+
+
+def _skew_oracle(label: str, tbl: str, key: str) -> str:
+    avg = R(f"CAST((SELECT count(*) FROM {tbl}) AS DOUBLE) / count(*)", 4)
+    skew = R(f"CAST(max(cnt) * count(*) AS DOUBLE) / (SELECT count(*) FROM {tbl})", 4)
+    return _SKEW_ORACLE_ONE.format(
+        label=label, tbl=tbl, key=key, avg_expr=avg, skew_expr=skew
+    )
+
+
+@query(
+    "join_key_skew_report",
+    oracle=(
+        _skew_oracle("lineitem.l_partkey", "lineitem", "l_partkey")
+        + " UNION ALL "
+        + _skew_oracle("lineitem.l_suppkey", "lineitem", "l_suppkey")
+        + " UNION ALL "
+        + _skew_oracle("orders.o_custkey", "orders", "o_custkey")
+        + " ORDER BY key_name"
+    ),
+)
+def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def one(tbl: DataFrame, label: str, key: str) -> DataFrame:
+        cnts = tbl.groupBy(F.col(key).cast("long").alias("k")).agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        return cnts.agg(
+            F.lit(label).alias("key_name"),
+            F.sum("cnt").cast("long").alias("n_rows"),
+            F.count(F.lit(1)).cast("long").alias("n_keys"),
+            F.max("cnt").cast("long").alias("max_per_key"),
+            # argmax with smallest-key tie-break: struct compare is
+            # lexicographic, -k turns "max key" into "min key"
+            (-F.max(F.struct(F.col("cnt"), (-F.col("k")).alias("nk")))["nk"])
+            .cast("long")
+            .alias("hot_key"),
+            pround(F.sum("cnt").cast("double") / F.count(F.lit(1)), 4).alias(
+                "avg_per_key"
+            ),
+            pround(
+                (F.max("cnt") * F.count(F.lit(1))).cast("double") / F.sum("cnt"), 4
+            ).alias("skew_ratio"),
+        )
+
+    li = load_table(spark, sf_dir, "lineitem")
+    od = load_table(spark, sf_dir, "orders")
+    return (
+        one(li, "lineitem.l_partkey", "l_partkey")
+        .unionByName(one(li, "lineitem.l_suppkey", "l_suppkey"))
+        .unionByName(one(od, "orders.o_custkey", "o_custkey"))
+        .orderBy("key_name")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Effective tax-rate audit (the under-used l_tax column): per return
+# flag / line status, exact-cents tax collected vs the discounted
+# base, plus the min/max stored tax rate — a reconciliation check a
+# revenue pipeline runs before publishing. Per-row tax amounts are
+# rounded to cents ONCE (portable floor+0.5) then summed exactly.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "lineitem_tax_audit",
+    oracle=f"""
+SELECT l_returnflag, l_linestatus,
+       CAST(count(*) AS BIGINT) AS n_items,
+       {R("CAST(sum(" + sql_cents("l_extendedprice * (1 - l_discount)") + ") AS DOUBLE) / 100.0", 2)}
+         AS base_revenue,
+       {R("CAST(sum(" + sql_cents("l_extendedprice * (1 - l_discount) * l_tax") + ") AS DOUBLE) / 100.0", 2)}
+         AS tax_collected,
+       {R("CAST(sum(" + sql_cents("l_extendedprice * (1 - l_discount) * l_tax") + ") AS DOUBLE)"
+          " / CAST(sum(" + sql_cents("l_extendedprice * (1 - l_discount)") + ") AS DOUBLE)", 6)}
+         AS effective_rate,
+       {R("min(l_tax)", 2)} AS min_rate,
+       {R("max(l_tax)", 2)} AS max_rate
+FROM lineitem
+GROUP BY l_returnflag, l_linestatus
+ORDER BY l_returnflag, l_linestatus
+""",
+)
+def lineitem_tax_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.portable import cents
+
+    li = load_table(spark, sf_dir, "lineitem")
+    base = cents(F.expr("l_extendedprice * (1 - l_discount)"))
+    tax = cents(F.expr("l_extendedprice * (1 - l_discount) * l_tax"))
+    return (
+        li.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_items"),
+            F.sum(base).cast("long").alias("base_c"),
+            F.sum(tax).cast("long").alias("tax_c"),
+            F.min("l_tax").alias("mnr"),
+            F.max("l_tax").alias("mxr"),
+        )
+        .select(
+            "l_returnflag",
+            "l_linestatus",
+            "n_items",
+            pround(F.col("base_c").cast("double") / F.lit(100.0), 2).alias(
+                "base_revenue"
+            ),
+            pround(F.col("tax_c").cast("double") / F.lit(100.0), 2).alias(
+                "tax_collected"
+            ),
+            pround(
+                F.col("tax_c").cast("double") / F.col("base_c").cast("double"), 6
+            ).alias("effective_rate"),
+            pround(F.col("mnr"), 2).alias("min_rate"),
+            pround(F.col("mxr"), 2).alias("max_rate"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+# ---------------------------------------------------------------------------
+# ANALYZE-style column profiler for `orders`: one scan computes
+# null-count / exact distinct / min / max for every column, then a
+# stack() unpivots the single aggregate row into one row per column.
+# All reprs are canonical strings (longs, cents-longs, ISO dates) so
+# both engines render identically. Scale: one pass + six count-distinct
+# partials — exactly what a table-stats collector does before CBO; at
+# 100 TB swap the exact distincts for HLL (approx_distinct_* pattern).
+# ---------------------------------------------------------------------------
+
+_PROFILE_COLS = [
+    # (name, spark/duck repr expression template over {c})
+    ("o_orderkey", "CAST({c} AS BIGINT)"),
+    ("o_custkey", "CAST({c} AS BIGINT)"),
+    ("o_orderstatus", "{c}"),
+    ("o_totalprice", sql_cents("{c}")),
+    ("o_orderdate", None),  # date — engine-specific rendering below
+    ("o_orderpriority", "{c}"),
+]
+
+
+def _profile_oracle() -> str:
+    branches = []
+    for name, tmpl in _PROFILE_COLS:
+        if tmpl is None:
+            rep = f"strftime(min(o_orderdate), '%Y-%m-%d')", f"strftime(max(o_orderdate), '%Y-%m-%d')"
+            mn, mx = rep
+        else:
+            e = tmpl.format(c=name)
+            mn, mx = f"CAST(min({e}) AS VARCHAR)", f"CAST(max({e}) AS VARCHAR)"
+        branches.append(
+            f"SELECT '{name}' AS col_name,"
+            f" CAST(count(*) - count({name}) AS BIGINT) AS n_nulls,"
+            f" CAST(count(DISTINCT {name}) AS BIGINT) AS n_distinct,"
+            f" {mn} AS min_repr, {mx} AS max_repr FROM orders"
+        )
+    return " UNION ALL ".join(branches) + " ORDER BY col_name"
+
+
+@query("orders_column_profile", oracle=_profile_oracle())
+def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders")
+    aggs = []
+    for name, tmpl in _PROFILE_COLS:
+        if tmpl is None:
+            mn = F.date_format(F.min(name), "yyyy-MM-dd")
+            mx = F.date_format(F.max(name), "yyyy-MM-dd")
+        else:
+            e = F.expr(tmpl.format(c=name))
+            mn = F.min(e).cast("string")
+            mx = F.max(e).cast("string")
+        aggs += [
+            (F.count(F.lit(1)) - F.count(name)).cast("long").alias(f"nn_{name}"),
+            F.count_distinct(F.col(name)).cast("long").alias(f"nd_{name}"),
+            mn.alias(f"mn_{name}"),
+            mx.alias(f"mx_{name}"),
+        ]
+    one = orders.agg(*aggs)
+    stack_args = ", ".join(
+        f"'{name}', nn_{name}, nd_{name}, mn_{name}, mx_{name}"
+        for name, _ in _PROFILE_COLS
+    )
+    return one.selectExpr(
+        f"stack({len(_PROFILE_COLS)}, {stack_args})"
+        " AS (col_name, n_nulls, n_distinct, min_repr, max_repr)"
+    ).orderBy("col_name")
+
+
+# ---------------------------------------------------------------------------
+# Exact mode profile: the most frequent quantity per return flag (min
+# value wins ties — deterministic in both engines), its frequency, and
+# the distinct-value count. Two bounded aggregations; the rank window
+# runs over the (flag x quantity) aggregate, not the fact table.
+# ---------------------------------------------------------------------------
+@query(
+    "lineitem_quantity_mode_profile",
+    oracle=f"""
+WITH g AS (
+  SELECT l_returnflag, {sql_cents("l_quantity")} AS qc,
+         CAST(count(*) AS BIGINT) AS freq
+  FROM lineitem GROUP BY l_returnflag, qc
+), r AS (
+  SELECT l_returnflag, qc, freq,
+         row_number() OVER (PARTITION BY l_returnflag
+                            ORDER BY freq DESC, qc) AS rk,
+         CAST(count(*) OVER (PARTITION BY l_returnflag) AS BIGINT)
+           AS n_distinct_qty
+  FROM g
+)
+SELECT l_returnflag,
+       {R("CAST(qc AS DOUBLE) / 100.0", 2)} AS mode_quantity,
+       freq AS mode_freq, n_distinct_qty
+FROM r WHERE rk = 1
+ORDER BY l_returnflag
+""",
+)
+def lineitem_quantity_mode_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    g = (
+        li.select("l_returnflag", cents("l_quantity").alias("qc"))
+        .groupBy("l_returnflag", "qc")
+        .agg(F.count(F.lit(1)).cast("long").alias("freq"))
+    )
+    r = g.select(
+        "l_returnflag",
+        "qc",
+        "freq",
+        F.row_number()
+        .over(W.partitionBy("l_returnflag").orderBy(F.desc("freq"), "qc"))
+        .alias("rk"),
+        F.count(F.lit(1))
+        .over(W.partitionBy("l_returnflag"))
+        .cast("long")
+        .alias("n_distinct_qty"),
+    )
+    return (
+        r.filter(F.col("rk") == 1)
+        .select(
+            "l_returnflag",
+            pround(F.col("qc").cast("double") / 100.0, 2).alias("mode_quantity"),
+            F.col("freq").alias("mode_freq"),
+            "n_distinct_qty",
+        )
+        .orderBy("l_returnflag")
     )

@@ -29,10 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.portable import pround, sql_round as R
+from ..functions.portable import SQL_EXACT_INT as _DEC, pround, sql_round as R
 from ..registry import query
 
-_DEC = "decimal(38,0)"
 _DIM = 64
 _ITERS = 3
 

@@ -18,10 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.portable import cents, pround, sql_cents, sql_round as R
+from ..functions.portable import SQL_EXACT_INT as _DEC, cents, pround, sql_cents, sql_round as R
 from ..registry import query
 
-_DEC = "decimal(38,0)"
 
 # ---------------------------------------------------------------------------
 # Theil–Sen: median of pairwise slopes (demand qty vs retail price per

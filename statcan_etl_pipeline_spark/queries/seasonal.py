@@ -21,8 +21,6 @@ from ..catalog import load_table
 from ..functions.portable import cents, pround, sql_cents, sql_round as R
 from ..registry import query
 
-_DEC = "decimal(38,0)"
-
 
 # ---------------------------------------------------------------------------
 # Denton-style pro-rata benchmarking: the monthly order-revenue

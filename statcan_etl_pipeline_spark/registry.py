@@ -16,6 +16,8 @@ Conventions that keep cross-engine hashes stable:
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,47 +46,12 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def _load_all() -> None:
-    # Import for registration side effects.
-    from .queries import (  # noqa: F401
-        analytics,
-        analytics2,
-        analytics3,
-        analytics4,
-        analytics5,
-        analytics6,
-        analytics7,
-        analytics8,
-        analytics9,
-        analytics10,
-        approx,
-        arrowexec,
-        curation,
-        curation2,
-        curation3,
-        curation4,
-        dedup,
-        embeddings,
-        etl,
-        graph,
-        multimodal,
-        pca,
-        planted,
-        recursive,
-        retrieval,
-        relational,
-        relational2,
-        relational3,
-        robust,
-        seasonal,
-        similarity,
-        spark4,
-        stats,
-        stats2,
-        survey,
-        survey2,
-        temporal,
-        text,
-    )
+    """Import every module under queries/ for its registration side
+    effects; the directory is the only list of query modules."""
+    from . import queries
+
+    for mod in sorted(m.name for m in pkgutil.iter_modules(queries.__path__)):
+        importlib.import_module(f"{queries.__name__}.{mod}")
 
 
 _load_all()

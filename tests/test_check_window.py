@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -67,6 +68,43 @@ def test_manifest_schema_and_clean_tree_passes():
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
 
+
+
+def test_clean_tree_passes_from_another_checkout_path(tmp_path):
+    """The planted oracles embed an absolute fixture path, so their blobs
+    depend on where the repo lives; the checker hashes them with the repo
+    root replaced by a token. A copy of the tree at another path must
+    pass exactly as this one does."""
+    copy = tmp_path / "elsewhere"
+    ignore = shutil.ignore_patterns("__pycache__", "*.pyc")
+    for d in ("statcan_etl_pipeline_spark", "scripts"):
+        shutil.copytree(os.path.join(REPO, d), copy / d, ignore=ignore)
+    shutil.copy(os.path.join(REPO, "__spark_entry__.py"), copy)
+    proc = subprocess.run(
+        [sys.executable, os.path.join("scripts", "check_window.py")],
+        capture_output=True,
+        text=True,
+        cwd=copy,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+
+
+def test_snapshotted_query_that_is_no_longer_registered_fails(
+    tmp_path, monkeypatch, capsys
+):
+    """A query in the manifest that the registry no longer has (a move
+    that dropped a function) fails the check, even though no registered
+    query's hash moved."""
+    cur, mod_files, _ = check_window._current_hashes()
+    cur["no_such_query"] = "0" * 32
+    manifest = tmp_path / "query_hashes.json"
+    manifest.write_text(
+        json.dumps({"version": check_window.HASH_VERSION, "queries": cur, "modules": mod_files})
+    )
+    monkeypatch.setattr(check_window, "MANIFEST", str(manifest))
+    monkeypatch.setattr(sys, "argv", ["check_window.py"])
+    assert check_window.main() == 1
+    assert "no_such_query" in capsys.readouterr().out
 
 def test_check_first_names_are_unique_and_registered():
     """r13: _CHECK_FIRST is the driver-window ordering — a duplicate

@@ -17,7 +17,7 @@ import pytest
 
 from statcan_etl_pipeline_spark.registry import QUERIES  # loads all modules
 
-from statcan_etl_pipeline_spark.queries.analytics3 import (  # noqa: E402
+from statcan_etl_pipeline_spark.queries.graph import (  # noqa: E402
     copurchase_wedge_similarity,
 )
 
@@ -37,7 +37,7 @@ def test_banded_subset_and_recall_vs_wedge(spark, request, sf_fixture, recall_fl
     96×2-row bands, cap 256: measured 19796/19899 = 0.995 at sf0.001,
     62/88 = 0.705 at sf0.01 — up from 0.83/0.25 at the r12 24-band
     setting for a measured ×1.39 sf0.1 / ×1.96 sf1 cost; the full
-    curve is in the analytics3.py banner and SCALING.md)."""
+    curve is in the graph.py banner and SCALING.md)."""
     sf_dir = request.getfixturevalue(sf_fixture)
     banded = _rows(QUERIES["copurchase_part_similarity"](spark, sf_dir))
     exact = _rows(copurchase_wedge_similarity(spark, sf_dir))
@@ -90,7 +90,7 @@ def test_banded_subset_property_on_random_graphs(spark, tmp_path, seed, bucket_c
     exclusion)."""
     import numpy as np
 
-    from statcan_etl_pipeline_spark.queries.analytics3 import _banded_similarity
+    from statcan_etl_pipeline_spark.queries.graph import _banded_similarity
 
     rng = np.random.default_rng(seed)
     n_lines = 800

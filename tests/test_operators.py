@@ -387,20 +387,26 @@ def test_check_freshness_flags_stale_and_empty(spark):
 
 
 def test_asof_nearest_keeps_rows_with_null_payload(spark):
-    """Regression: the back/forward recombination must be null-SAFE —
-    a left row with a NULL payload column used to vanish entirely."""
+    """Regression: every left row comes back exactly once. A left row
+    with a NULL payload column used to vanish, and two identical left
+    rows used to match each other and multiply (3 rows in, 5 out),
+    when the backward and forward passes were joined on every left
+    column."""
     from statcan_etl_pipeline_spark.operators.temporal import asof_join_nearest
 
     left = spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", None), (1, "2024-01-01 11:00:00", "x")],
+        [(1, "2024-01-01 10:00:00", None), (1, "2024-01-01 11:00:00", "x"),
+         (1, "2024-01-01 11:00:00", "x")],
         "k long, ts string, lv string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     right = spark.createDataFrame(
         [(1, "2024-01-01 10:30:00", "r1")], "k long, ts string, rv string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     rows = asof_join_nearest(left, right, on=["k"]).collect()
-    assert len(rows) == 2  # NULL-payload row preserved
-    assert all(r["matched_rv"] == "r1" for r in rows)
+    assert sorted((r["lv"] or "", r["matched_rv"]) for r in rows) == [
+        ("", "r1"), ("x", "r1"), ("x", "r1"),
+    ]
+
 
 
 def test_star_components_single_label_even_unconverged(spark):

@@ -150,7 +150,7 @@ def test_text_twins_match_duckdb_on_adversarial_strings(spark):
 def test_ln_micro_quantization_matches_duckdb_bit_for_bit(spark):
     """The LAST two math-library dependencies in the oracle surface:
     doc_bm25_search's idf (retrieval.py) and doc_dsir_importance_weights'
-    log-ratio (curation4.py) both micro-quantize a natural log as
+    log-ratio (curation.py) both micro-quantize a natural log as
     floor(ln(x)*1e6 + 0.5). Cross-engine hash equality there rests on
     JVM StrictMath.log and DuckDB std::log agreeing to within the
     half-ulp guard at every argument either query can produce. Pin it
