@@ -50,16 +50,12 @@ import re
 import sys
 import time
 
-import duckdb
 import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tests.oracle import diff, duck_connection  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -142,17 +138,12 @@ def min_id_components(vertices: np.ndarray, src: np.ndarray, dst: np.ndarray):
 class Ctx:
     def __init__(self, sf_dir: str):
         self.sf_dir = sf_dir
-        self.con = duckdb.connect()
+        self.con = duck_connection(sf_dir)
         # sf1's LPA rounds grow a ~20M-edge join state; unbounded,
         # DuckDB's default (80% of RAM) OOM-killed the process on a
         # 128 GB box alongside the Spark JVM. Cap + spill instead.
         self.con.execute("SET memory_limit = '40GB'")
         self.con.execute("SET temp_directory = '/tmp/duckdb_spill'")
-        for t in TABLES:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            self.con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
         self._pairs = None
         self._emb = None
         self._lsh_pairs = None
@@ -678,32 +669,10 @@ HOLDOUTS = {
 }
 
 
-def _aligned(col: pd.Series) -> np.ndarray:
-    if col.dtype.kind in "iu":
-        return col.to_numpy(np.int64)
-    if col.dtype.kind == "f":
-        return col.to_numpy(np.float64)
-    return col.astype(str).to_numpy()
-
-
-def compare(got: pd.DataFrame, exp: pd.DataFrame) -> tuple[bool, str]:
-    if list(got.columns) != list(exp.columns):
-        return False, f"columns {list(got.columns)} != {list(exp.columns)}"
-    if len(got) != len(exp):
-        return False, f"rows {len(got)} != {len(exp)}"
-    cols = list(got.columns)
-    g = got.sort_values(cols).reset_index(drop=True)
-    e = exp.sort_values(cols).reset_index(drop=True)
-    for c in cols:
-        a, b = _aligned(g[c]), _aligned(e[c])
-        if a.dtype.kind == "f":
-            ok = ((a == b) | (np.isnan(a) & np.isnan(b))).all()
-        else:
-            ok = (a == b).all()
-        if not ok:
-            i = int(np.nonzero(~(a == b))[0][0])
-            return False, f"col {c} first diff at sorted row {i}: {a[i]!r} != {b[i]!r}"
-    return True, ""
+def rows(df: pd.DataFrame) -> list[tuple]:
+    """A checker's result as row tuples of Python scalars, the shape
+    `tests.oracle.diff` compares."""
+    return list(df.astype(object).itertuples(index=False, name=None))
 
 
 def main() -> None:
@@ -722,12 +691,14 @@ def main() -> None:
     failed = []
     for name in names:
         t0 = time.time()
-        got = QUERIES[name](spark, args.sf_dir).toPandas()
+        sdf = QUERIES[name](spark, args.sf_dir)
+        got = [tuple(r) for r in sdf.collect()]
         t_spark = time.time() - t0
         t0 = time.time()
         exp = HOLDOUTS[name](ctx)
         t_check = time.time() - t0
-        ok, why = compare(got, exp)
+        why = diff(sdf.columns, got, list(exp.columns), rows(exp))
+        ok = not why
         results[name] = {
             "match": ok,
             "rows": len(got),

@@ -30,8 +30,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from statcan_etl_pipeline_spark.catalog import table_path  # noqa: E402
 from statcan_etl_pipeline_spark.session import get_spark  # noqa: E402
 from statcan_etl_pipeline_spark.streaming.jobs import (  # noqa: E402
@@ -63,15 +61,6 @@ def _stage_dir(sf_dir: str) -> str:
     d = tempfile.mkdtemp(prefix="events_stream_")
     os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
     return d
-
-
-def _normalized_stream(spark, sf_dir, stage_dir):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    raw = events_stream(spark, stage_dir, schema)
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
 
 
 def _profile(spark, name: str, df) -> dict:
@@ -137,7 +126,7 @@ def main() -> None:
     try:
         for name, build in jobs.items():
             try:
-                df = build(_normalized_stream(spark, sf_dir, stage_dir))
+                df = build(events_stream(spark, sf_dir, stage_dir))
             except Exception as e:  # job not present in this build
                 results.append({"job": name, "error": str(e)[:200]})
                 continue

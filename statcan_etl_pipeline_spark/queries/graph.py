@@ -1251,6 +1251,36 @@ def _kcore_delta_peel(spark: SparkSession, sf_dir: str, max_rounds: int):
     return edges, kdf, nodes, alive.select("node"), converged, rounds_done
 
 
+def _kcore_summary(
+    edges: DataFrame,
+    kdf: DataFrame,
+    nodes: DataFrame,
+    alive: DataFrame,
+    *tail: F.Column,
+) -> DataFrame:
+    """The one-row k-core report of a peel: k, node count, core node
+    count and core-induced edge count, then the caller's `tail` columns."""
+    n0 = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
+    nc = alive.agg(F.count(F.lit(1)).cast("long").alias("n_core_nodes"))
+    ne = (
+        edges.join(alive.select(F.col("node").alias("u")), "u")
+        .join(alive.select(F.col("node").alias("v")), "v")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_core_edges_in"))
+    )
+    return (
+        kdf.crossJoin(F.broadcast(n0))
+        .crossJoin(F.broadcast(nc))
+        .crossJoin(F.broadcast(ne))
+        .select(
+            "k",
+            "n_nodes",
+            "n_core_nodes",
+            "n_core_edges_in",
+            *tail,
+        )
+    )
+
+
 @query("part_kcore_decomposition", oracle=_kcore_oracle())
 def part_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PUBLISHED CONTRACT (r13, VERDICT r12 item 4): this query reports
@@ -1273,24 +1303,8 @@ def part_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, kdf, nodes, alive, converged, _ = _kcore_delta_peel(
         spark, sf_dir, _KCORE_ROUNDS
     )
-    n0 = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    nc = alive.agg(F.count(F.lit(1)).cast("long").alias("n_core_nodes"))
-    ne = (
-        edges.join(alive.select(F.col("node").alias("u")), "u")
-        .join(alive.select(F.col("node").alias("v")), "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_core_edges_in"))
-    )
-    return (
-        kdf.crossJoin(F.broadcast(n0))
-        .crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(ne))
-        .select(
-            "k",
-            "n_nodes",
-            "n_core_nodes",
-            "n_core_edges_in",
-            F.lit(converged).cast("long").alias("converged"),
-        )
+    return _kcore_summary(
+        edges, kdf, nodes, alive, F.lit(converged).cast("long").alias("converged")
     )
 
 
@@ -1329,25 +1343,13 @@ def part_kcore_converged(
         raise RuntimeError(
             f"part_kcore_converged: no fixpoint within {max_rounds} rounds"
         )
-    n0 = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    nc = alive.agg(F.count(F.lit(1)).cast("long").alias("n_core_nodes"))
-    ne = (
-        edges.join(alive.select(F.col("node").alias("u")), "u")
-        .join(alive.select(F.col("node").alias("v")), "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_core_edges_in"))
-    )
-    return (
-        kdf.crossJoin(F.broadcast(n0))
-        .crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(ne))
-        .select(
-            "k",
-            "n_nodes",
-            "n_core_nodes",
-            "n_core_edges_in",
-            F.lit(rounds).cast("long").alias("rounds"),
-            F.lit(1).cast("long").alias("converged"),
-        )
+    return _kcore_summary(
+        edges,
+        kdf,
+        nodes,
+        alive,
+        F.lit(rounds).cast("long").alias("rounds"),
+        F.lit(1).cast("long").alias("converged"),
     )
 
 

@@ -25,6 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import stream_table
 from ..functions.portable import cents, money_sum
 from ..operators.incremental import latest_revision, merge_latest_by, scd2_history, upsert
 
@@ -38,9 +39,10 @@ def _with_event_time(stream: DataFrame, col: str = "ts") -> DataFrame:
     return stream.withColumn(col, F.col(col).cast("timestamp"))
 
 
-def events_stream(spark: SparkSession, events_path: str, schema) -> DataFrame:
-    """File-based stream of events (one file = one micro-batch source)."""
-    return _with_event_time(spark.readStream.schema(schema).parquet(events_path))
+def events_stream(spark: SparkSession, sf_dir: str, source_dir: str) -> DataFrame:
+    """File-based stream of the parquet files in `source_dir` (one file =
+    one micro-batch source), read with the `events` table's schema."""
+    return stream_table(spark, sf_dir, "events", source_dir)
 
 
 def windowed_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:

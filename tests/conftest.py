@@ -14,14 +14,12 @@ SF_MED = os.environ.get("SPARK_GRAFT_SF_MED", "/root/testdata/sf0.01")
 
 
 @pytest.fixture(scope="session")
-def spark():
-    import tempfile
-
+def spark(tmp_path_factory):
     s = get_spark(
         app_name="pytest",
         cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
         extra_conf={
-            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark_warehouse_")
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("spark_warehouse"))
         },
     )
     yield s

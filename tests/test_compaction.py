@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from statcan_etl_pipeline_spark.catalog import load_table
@@ -17,13 +15,9 @@ from statcan_etl_pipeline_spark.sinks.compaction import (
 )
 
 
-def _tmp(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix)
-
-
-def test_compaction_reduces_file_count(spark, sf_small):
-    src = _tmp("frag_src_")
-    out = _tmp("compact_out_")
+def test_compaction_reduces_file_count(spark, sf_small, tmp_path):
+    src = str(tmp_path / "frag_src")
+    out = str(tmp_path / "compact_out")
     orders = load_table(spark, sf_small, "orders")
     # simulate a fragmented streaming sink: 64 tiny files
     orders.repartition(64).write.mode("overwrite").parquet(src)
@@ -39,9 +33,9 @@ def test_compaction_reduces_file_count(spark, sf_small):
     assert a == b
 
 
-def test_compaction_preserves_hive_partitions(spark, sf_small):
-    src = _tmp("frag_part_src_")
-    out = _tmp("compact_part_out_")
+def test_compaction_preserves_hive_partitions(spark, sf_small, tmp_path):
+    src = str(tmp_path / "frag_part_src")
+    out = str(tmp_path / "compact_part_out")
     orders = load_table(spark, sf_small, "orders").withColumn(
         "status", F.col("o_orderstatus")
     )
@@ -55,12 +49,12 @@ def test_compaction_preserves_hive_partitions(spark, sf_small):
     assert back.count() == orders.count()
 
 
-def test_compaction_splits_oversized_hive_partition(spark, sf_small):
+def test_compaction_splits_oversized_hive_partition(spark, sf_small, tmp_path):
     """A hive partition larger than target_bytes must split into
     multiple ~target-size files, not collapse into one file per
     partition dir."""
-    src = _tmp("frag_big_src_")
-    out = _tmp("compact_big_out_")
+    src = str(tmp_path / "frag_big_src")
+    out = str(tmp_path / "compact_big_out")
     orders = load_table(spark, sf_small, "orders").withColumn(
         "bucket", F.when(F.col("o_orderkey") % 20 == 0, "small").otherwise("big")
     )
@@ -82,12 +76,12 @@ def test_compaction_splits_oversized_hive_partition(spark, sf_small):
     assert stats["after"]["n_files"] == len(big_files) + len(small_files)
 
 
-def test_compaction_keeps_null_partition_rows(spark, sf_small):
+def test_compaction_keeps_null_partition_rows(spark, sf_small, tmp_path):
     """NULL partition values are legal hive partitions
     (__HIVE_DEFAULT_PARTITION__); compaction must not drop them (a
     null-unsafe equi-join against the per-partition counts would)."""
-    src = _tmp("frag_null_src_")
-    out = _tmp("compact_null_out_")
+    src = str(tmp_path / "frag_null_src")
+    out = str(tmp_path / "compact_null_out")
     orders = load_table(spark, sf_small, "orders").withColumn(
         "status",
         F.when(F.col("o_orderkey") % 3 == 0, F.lit(None).cast("string")).otherwise(
@@ -105,12 +99,12 @@ def test_compaction_keeps_null_partition_rows(spark, sf_small):
     assert back.filter(F.col("status").isNull()).count() == n_null
 
 
-def test_compaction_splits_exact_duplicate_rows(spark):
+def test_compaction_splits_exact_duplicate_rows(spark, tmp_path):
     """An oversized partition made of EXACT-duplicate rows must still
     split across files — a row-hash salt would send every copy to one
     group (and one file)."""
-    src = _tmp("frag_dup_src_")
-    out = _tmp("compact_dup_out_")
+    src = str(tmp_path / "frag_dup_src")
+    out = str(tmp_path / "compact_dup_out")
     df = (
         spark.range(0, 200_000)
         .select(
@@ -170,12 +164,12 @@ def test_zorder_value_is_deterministic_and_bounded(spark, sf_small):
     ).select("_zvalue").collect()
 
 
-def test_zorder_layout_skips_files_on_both_columns(spark, sf_small):
+def test_zorder_layout_skips_files_on_both_columns(spark, sf_small, tmp_path):
     """The point of z-order: a filter on EITHER clustered column should
     touch a small subset of files (file-level min/max stats), unlike a
     random layout where every file matches."""
-    rand_path = _tmp("layout_rand_")
-    z_path = _tmp("layout_z_")
+    rand_path = str(tmp_path / "layout_rand")
+    z_path = str(tmp_path / "layout_z")
     orders = load_table(spark, sf_small, "orders")
     n_files = 8
     # baseline: hash-scatter (every file spans the full key range)
@@ -225,7 +219,7 @@ def test_compaction_plan_properties():
     check()
 
 
-def test_compaction_salt_is_reproducible(spark, sf_small):
+def test_compaction_salt_is_reproducible(spark, sf_small, tmp_path):
     """The content-derived salt makes the partitioned-compaction output
     layout deterministic: compacting the same input twice produces
     identical per-file row multisets (the verdict criterion for
@@ -235,13 +229,13 @@ def test_compaction_salt_is_reproducible(spark, sf_small):
     orders = load_table(spark, sf_small, "orders").withColumn(
         "bucket", F.when(F.col("o_orderkey") % 20 == 0, "small").otherwise("big")
     )
-    src = _tmp("salt_src_")
+    src = str(tmp_path / "salt_src")
     orders.repartition(8).write.mode("overwrite").partitionBy("bucket").parquet(src)
     total = sum(sz for _, sz in list_data_files(spark, src))
     target = max(total // 6, 1)
 
-    def layout() -> list:
-        out = _tmp("salt_out_")
+    def layout(name: str) -> list:
+        out = str(tmp_path / name)
         compact_parquet(
             spark, src, out, target_bytes=target, partition_cols=["bucket"]
         )
@@ -254,4 +248,4 @@ def test_compaction_salt_is_reproducible(spark, sf_small):
         # (partition, row-content) file payloads
         return sorted(per_file)
 
-    assert layout() == layout()
+    assert layout("salt_out0") == layout("salt_out1")

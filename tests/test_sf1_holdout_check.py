@@ -24,6 +24,8 @@ import sys
 import numpy as np
 import pytest
 
+from .oracle import diff
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.001")
 
@@ -72,11 +74,11 @@ def test_checker_matches_registered_oracle(ctx, ctx_small, name):
     c = ctx_small if name in _SMALL_EMB else ctx
     res = c.con.execute(ORACLES[name])
     cols = [d[0] for d in res.description]
-    oracle = res.df()
+    oracle = res.fetchall()
     expected = chk.HOLDOUTS[name](c)
     assert list(expected.columns) == cols
-    ok, why = chk.compare(oracle, expected)
-    assert ok, f"{name}: checker != oracle at {SF_DIR}: {why}"
+    why = diff(cols, oracle, cols, chk.rows(expected))
+    assert not why, f"{name}: checker != oracle at {SF_DIR}: {why}"
 
 
 def test_fixed_point_helpers_match_portable_semantics():

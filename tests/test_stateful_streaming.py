@@ -4,7 +4,7 @@ and converge to the batch-mode answer."""
 from __future__ import annotations
 
 import os
-import tempfile
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -14,10 +14,9 @@ from statcan_etl_pipeline_spark.catalog import load_table, table_path
 from statcan_etl_pipeline_spark.streaming.stateful import stateful_user_totals
 
 
-def _two_batch_dir(sf_dir: str) -> str:
-    """Split events into two parquet files → two micro-batches
+def _two_batch_dir(sf_dir: str, d: Path) -> str:
+    """Split events into two parquet files in `d` → two micro-batches
     (maxFilesPerTrigger=1)."""
-    d = tempfile.mkdtemp(prefix="events_2batch_")
     src = table_path(sf_dir, "events")
     duckdb.sql(
         f"COPY (SELECT user_id, value FROM '{src}' WHERE event_id % 2 = 0) "
@@ -27,11 +26,11 @@ def _two_batch_dir(sf_dir: str) -> str:
         f"COPY (SELECT user_id, value FROM '{src}' WHERE event_id % 2 = 1) "
         f"TO '{os.path.join(d, 'b.parquet')}' (FORMAT PARQUET)"
     )
-    return d
+    return str(d)
 
 
-def test_stateful_totals_accumulate_across_batches(spark, sf_small):
-    d = _two_batch_dir(sf_small)
+def test_stateful_totals_accumulate_across_batches(spark, sf_small, tmp_path):
+    d = _two_batch_dir(sf_small, tmp_path)
     stream = (
         spark.readStream.schema("user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)
@@ -82,7 +81,7 @@ def _has_protobuf() -> bool:
     reason="transformWithStateInPandas needs google.protobuf (absent in this "
     "sandbox); the operator is exercised on protobuf-equipped clusters",
 )
-def test_transform_with_state_accumulates_across_batches(spark, sf_small):
+def test_transform_with_state_accumulates_across_batches(spark, sf_small, tmp_path):
     """transformWithStateInPandas (Spark 4 typed-state API): ValueState
     survives micro-batch boundaries and converges to the batch answer."""
     from statcan_etl_pipeline_spark.streaming.stateful import tws_user_totals
@@ -92,7 +91,7 @@ def test_transform_with_state_accumulates_across_batches(spark, sf_small):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    d = _two_batch_dir(sf_small)
+    d = _two_batch_dir(sf_small, tmp_path)
     stream = (
         spark.readStream.schema("user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)

@@ -20,33 +20,18 @@ from statcan_etl_pipeline_spark.streaming.jobs import (
 )
 
 
-def _stream_schema(spark, sf_dir):
-    # File streams can't infer schema; reuse the batch reader's (and note
-    # the nanos ts is already normalized by catalog.load_table, so stream
-    # the RAW file with the raw schema and convert identically).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(table_path(sf_dir, "events")).schema
+def _stream(spark, sf_dir, tmp_path, copies=1):
+    """Events file stream over `copies` symlinks to the events file (a
+    file-stream source reads a directory; each file is one source)."""
+    d = tmp_path / "events_stream"
+    d.mkdir()
+    for i in range(copies):
+        (d / f"events_{i}.parquet").symlink_to(table_path(sf_dir, "events"))
+    return events_stream(spark, sf_dir, str(d))
 
 
-def _stage_dir(sf_dir: str) -> str:
-    # file-stream sources need a DIRECTORY; stage the single parquet via symlink
-    import os
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(table_path(sf_dir, "events"), os.path.join(d, "events.parquet"))
-    return d
-
-
-def _normalized_stream(spark, sf_dir):
-    raw = events_stream(spark, _stage_dir(sf_dir), _stream_schema(spark, sf_dir))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
-
-
-def test_windowed_counts_parity(spark, sf_small):
-    stream = _normalized_stream(spark, sf_small)
+def test_windowed_counts_parity(spark, sf_small, tmp_path):
+    stream = _stream(spark, sf_small, tmp_path)
     run_available_now(windowed_counts(stream), "stream_tumbling")
     got = {
         tuple(r)
@@ -61,8 +46,8 @@ def test_windowed_counts_parity(spark, sf_small):
     assert len(got) > 0
 
 
-def test_session_window_matches_batch_sessionize(spark, sf_small):
-    stream = _normalized_stream(spark, sf_small)
+def test_session_window_matches_batch_sessionize(spark, sf_small, tmp_path):
+    stream = _stream(spark, sf_small, tmp_path)
     run_available_now(session_counts(stream), "stream_sessions")
     stream_sessions = (
         spark.table("stream_sessions")
@@ -83,10 +68,10 @@ def test_session_window_matches_batch_sessionize(spark, sf_small):
     assert got == want
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_small):
+def test_stream_stream_interval_join_matches_batch(spark, sf_small, tmp_path):
     from statcan_etl_pipeline_spark.streaming.jobs import purchases_after_views_join
 
-    stream = _normalized_stream(spark, sf_small)
+    stream = _stream(spark, sf_small, tmp_path)
     q = (
         purchases_after_views_join(stream)
         .writeStream.format("memory")
@@ -121,27 +106,15 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_small):
     assert got == want and len(got) > 0
 
 
-def test_dedup_within_watermark_bounds_state(spark, sf_small):
+def test_dedup_within_watermark_bounds_state(spark, sf_small, tmp_path):
     """Streaming dedup drops the duplicate event_ids we inject and
     passes everything else through, with state bounded by the
     watermark."""
     from statcan_etl_pipeline_spark.streaming.jobs import deduped_stream
 
-    stream = _normalized_stream(spark, sf_small)
-    # duplicate every event by unioning the stream source with itself:
-    # stage the same file twice so the SECOND micro-batch replays ids.
-    import os
-
-    d = _stage_dir(sf_small)
-    os.symlink(
-        os.path.realpath(os.path.join(d, "events.parquet")),
-        os.path.join(d, "events_dup.parquet"),
-    )
-    from statcan_etl_pipeline_spark.streaming.jobs import events_stream
-
-    raw = events_stream(spark, d, _stream_schema(spark, sf_small))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    # duplicate every event: stage the same file twice so the SECOND
+    # micro-batch replays ids.
+    raw = _stream(spark, sf_small, tmp_path, copies=2)
     run_available_now(
         deduped_stream(raw, ["event_id"]), "stream_dedup", output_mode="append"
     )
@@ -150,25 +123,20 @@ def test_dedup_within_watermark_bounds_state(spark, sf_small):
     assert got == want  # every replayed id deduplicated, nothing lost
 
 
-def test_foreach_batch_upsert_latest_wins(spark, sf_small):
+def test_foreach_batch_upsert_latest_wins(spark, sf_small, tmp_path):
     """foreachBatch MERGE: after draining the stream, the target holds
     exactly one row per user with that user's latest event."""
-    import tempfile
-
     from statcan_etl_pipeline_spark.streaming.jobs import (
-        events_stream,
         read_merge_target,
         run_foreach_batch_upsert,
     )
 
-    target = tempfile.mkdtemp(prefix="upsert_target_") + "/t"
-    ckpt = tempfile.mkdtemp(prefix="upsert_ckpt_")
-    raw = events_stream(spark, _stage_dir(sf_small), _stream_schema(spark, sf_small))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    target = str(tmp_path / "t")
+    raw = _stream(spark, sf_small, tmp_path)
     slim = raw.select("user_id", "event_id", "ts", "event_type")
     run_foreach_batch_upsert(
-        slim, target, keys=["user_id"], order_col="event_id", checkpoint_dir=ckpt
+        slim, target, keys=["user_id"], order_col="event_id",
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     got = read_merge_target(spark, target)
     ev = load_table(spark, sf_small, "events")
@@ -185,37 +153,32 @@ def test_foreach_batch_upsert_latest_wins(spark, sf_small):
     assert mismatches == 0
 
 
-def test_foreach_batch_upsert_replay_idempotent(spark, sf_small):
+def test_foreach_batch_upsert_replay_idempotent(spark, sf_small, tmp_path):
     """Crash-replay semantics: re-processing the SAME micro-batch against
     an already-merged target (fresh checkpoint => batch 0 replays) must
     leave the table contents identical — the latest-wins MERGE is
     value-idempotent, so exactly-once EFFECT holds even though the
     batch runs twice."""
-    import tempfile
-
     from statcan_etl_pipeline_spark.streaming.jobs import (
-        events_stream,
         read_merge_target,
         run_foreach_batch_upsert,
     )
 
-    target = tempfile.mkdtemp(prefix="upsert_replay_") + "/t"
-    raw = events_stream(spark, _stage_dir(sf_small), _stream_schema(spark, sf_small))
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    target = str(tmp_path / "t")
+    raw = _stream(spark, sf_small, tmp_path)
     slim = raw.select("user_id", "event_id", "ts", "event_type")
 
-    def run_once():
-        ckpt = tempfile.mkdtemp(prefix="upsert_replay_ckpt_")
+    def run_once(ckpt):
         run_foreach_batch_upsert(
-            slim, target, keys=["user_id"], order_col="event_id", checkpoint_dir=ckpt
+            slim, target, keys=["user_id"], order_col="event_id",
+            checkpoint_dir=str(tmp_path / ckpt),
         )
         return sorted(
             tuple(r) for r in read_merge_target(spark, target).collect()
         )
 
-    first = run_once()
-    second = run_once()  # replay: same data, same batch ids, committed target
+    first = run_once("ckpt0")
+    second = run_once("ckpt1")  # replay: same data, same batch ids, committed target
     assert first == second
 
 
@@ -360,7 +323,7 @@ def test_uncommitted_replay_uses_strictly_older_base(spark, tmp_path, sink):
     assert got == want
 
 
-def test_stream_static_enrichment_matches_batch(spark, sf_small):
+def test_stream_static_enrichment_matches_batch(spark, sf_small, tmp_path):
     """Stream-static broadcast join parity: the availableNow streaming
     run enriched with the customer dimension equals the batch join on
     the same events."""
@@ -376,7 +339,7 @@ def test_stream_static_enrichment_matches_batch(spark, sf_small):
             F.col("c_mktsegment").alias("segment"),
         )
     )
-    stream = _normalized_stream(spark, sf_small)
+    stream = _stream(spark, sf_small, tmp_path)
     enriched = enriched_stream(stream, dim).select(
         "event_id", "user_id", "segment"
     )
@@ -448,12 +411,12 @@ def test_incremental_agg_replay_is_noop(spark, sf_small, tmp_path):
     assert after == before
 
 
-def test_chained_window_aggregation_matches_batch(spark, sf_small):
+def test_chained_window_aggregation_matches_batch(spark, sf_small, tmp_path):
     """Stacked stateful aggregations (15-min counts -> hourly max/sum)
     in one streaming query equal the two-step batch computation."""
     from statcan_etl_pipeline_spark.streaming.jobs import chained_windowed_max
 
-    stream = _normalized_stream(spark, sf_small)
+    stream = _stream(spark, sf_small, tmp_path)
     run_available_now(
         chained_windowed_max(stream, watermark="30 minutes"),
         "stream_chained",
@@ -532,7 +495,7 @@ def test_foreach_batch_fanout_two_sinks_consistent(spark, sf_small, tmp_path):
     writeStream alone can't express)."""
     raw_dir = str(tmp_path / "raw")
     agg_dir = str(tmp_path / "agg")
-    stream = _normalized_stream(spark, sf_small)
+    stream = _stream(spark, sf_small, tmp_path)
 
     def fanout(batch_df, batch_id):
         batch_df.persist()
@@ -646,7 +609,7 @@ def test_merge_batch_retention_policy(spark, tmp_path):
         _gc_versions(spark, target, keep=0)
 
 
-def test_stream_stream_left_outer_join_emits_unmatched(spark, sf_small):
+def test_stream_stream_left_outer_join_emits_unmatched(spark, sf_small, tmp_path):
     """LEFT OUTER stream-stream join: purchases with no preceding-hour
     view must surface with NULL view_id once the watermark passes, and
     matched rows must agree with the batch join. availableNow drains
@@ -655,7 +618,7 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, sf_small):
         purchases_after_views_outer_join,
     )
 
-    stream = _normalized_stream(spark, sf_small)
+    stream = _stream(spark, sf_small, tmp_path)
     q = (
         purchases_after_views_outer_join(stream)
         .writeStream.format("memory")
