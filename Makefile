@@ -5,11 +5,13 @@
 # (perfbench/) at a tiny size. `sweep` runs every registered query
 # against its DuckDB oracle at sf0.01 with the driver's exact check —
 # the gate for edits outside a query's own module (catalog, operators/,
-# functions/), which the driver-window hash cannot see.
+# functions/), which the driver-window hash cannot see. `window` runs
+# scripts/check_window.py: every query whose code or oracle changed
+# since scripts/query_hashes.json must sit in the driver's first 50.
 PYTEST = export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-.PHONY: test test-full selftest sweep
+.PHONY: test test-full selftest sweep window
 
 test:
 	$(PYTEST)
@@ -22,3 +24,6 @@ selftest:
 
 sweep:
 	python scripts/oracle_sweep.py --sf-dir /root/testdata/sf0.01
+
+window:
+	python scripts/check_window.py

@@ -46,14 +46,13 @@ from .similarity import _hyperplanes
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # PATH DEPENDENCE (r14, ADVICE): the DuckDB oracle strings for both
 # planted queries embed these ABSOLUTE read_parquet paths, resolved
-# from __file__ at import time — the oracle text (and any hash computed
-# over it, e.g. scripts/check_window.py's) is therefore
-# checkout-location-dependent. A relocated clone produces different
-# oracle strings and a one-time check_window "changed" report for the
-# two planted queries even though no source line moved; the driver's
-# value-hash parity is unaffected (both engines read the same committed
-# fixture bytes wherever the repo lives). Kept absolute deliberately:
-# the oracle runner's cwd is not part of the driver contract, so a
+# from __file__ at import time, so the oracle text is
+# checkout-location-dependent. scripts/check_window.py replaces the repo
+# root with a fixed token before hashing, so a relocated clone does not
+# report the two planted queries as changed; the driver's value-hash
+# parity is unaffected (both engines read the same committed fixture
+# bytes wherever the repo lives). Kept absolute deliberately: the
+# oracle runner's cwd is not part of the driver contract, so a
 # repo-relative path would silently break under any other cwd.
 GATE_PLANTED_DIR = os.path.join(_REPO, "testdata_planted", "sf0.01")
 

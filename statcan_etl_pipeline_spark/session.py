@@ -32,8 +32,9 @@ def get_spark(
         # TIMESTAMP_NTZ, which event-time features (withWatermark,
         # unix_micros, session_window) reject. Keep the classic TIMESTAMP
         # inference; with the session TZ pinned to UTC the values are
-        # identical. Operators also cast defensively for NTZ inputs that
-        # arrive from sessions not built here.
+        # identical. Star-table reads (catalog) take TIMESTAMP from the
+        # parquet footer whatever this conf says; the streaming jobs
+        # expect TIMESTAMP event time and fail at withWatermark on NTZ.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))

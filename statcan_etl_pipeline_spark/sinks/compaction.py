@@ -19,8 +19,9 @@ from __future__ import annotations
 import math
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
@@ -64,9 +65,24 @@ def compact_parquet(
     partition_cols: list[str] | None = None,
 ) -> dict:
     """Rewrite `path` into ~target-size files at `out_path`; returns
-    before/after stats. With `partition_cols`, the rewrite keeps the
-    hive layout and compacts within partitions (repartition by the
-    partition columns so each output partition dir gets whole tasks).
+    before/after stats.
+
+    With `partition_cols` the rewrite keeps the hive layout and lets the
+    parquet writer cut the files: one count turns `target_bytes` into a
+    row budget (rows × target / input bytes, the input's mean row size),
+    and `maxRecordsPerFile` closes a file when it reaches that budget.
+    A hive partition of r rows therefore gets ceil(r / budget) files,
+    exact duplicates split like any other rows (the writer counts
+    records, not content), and NULL partition values
+    (__HIVE_DEFAULT_PARTITION__) are kept. Each task sorts its rows by
+    a hash of their content before the writer cuts them, so the
+    per-file row sets are a function of the data, not of the input's
+    file layout or shuffle fetch order.
+
+    The one trade: rows are shuffled by the partition columns alone, so
+    each hive partition is written by ONE task, which writes its files
+    one after another; an oversized partition is not spread over
+    several tasks.
 
     Compacting in place on object stores needs a commit protocol
     (write temp + atomic swap); this writes to a NEW path and leaves
@@ -76,80 +92,18 @@ def compact_parquet(
     df = spark.read.parquet(path)
     n = before["target_files"]
     if partition_cols:
-        # Repartitioning by the partition columns alone would collapse
-        # every hive partition into a single task/file no matter its
-        # size. Instead, estimate each partition's bytes from its row
-        # share, derive a per-partition file count, and salt rows within
-        # the partition over that many groups so oversized partitions
-        # still split into ~target_bytes files.
-        pcols = list(partition_cols)
-        counts = df.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__rows"))
-        total_rows = F.sum("__rows").over(W.partitionBy())
-        counts = counts.withColumn(
-            "__files",
-            F.greatest(
-                F.lit(1),
-                F.ceil(
-                    F.col("__rows")
-                    * F.lit(float(before["total_bytes"]))
-                    / total_rows
-                    / F.lit(float(target_bytes))
-                ),
-            ),
-        )
-        # NULL partition values are legal hive partitions
-        # (__HIVE_DEFAULT_PARTITION__); a null-unsafe equi-join would
-        # silently DROP those rows from the compacted output, so the
-        # broadcast join must be eqNullSafe on every partition column.
-        cdf = counts.drop("__rows").alias("__c")
-        ddf = df.alias("__d")
-        cond = reduce(
-            lambda a, b: a & b,
-            [F.col(f"__d.{p}").eqNullSafe(F.col(f"__c.{p}")) for p in pcols],
-        )
-        # REPRODUCIBLE salt (a monotonically_increasing_id salt is
-        # partition-layout-dependent, so a task retry could re-salt rows
-        # differently and the output file layout would drift run-to-run):
-        #   1. __salt0 = xxhash64(all hashable columns) mod __files —
-        #      content-derived, so distinct rows spread deterministically.
-        #      Map columns are excluded (unhashable for xxhash64).
-        #   2. EXACT duplicates all share __salt0, so a duplicate-heavy
-        #      partition could blow one file past target; a row_number
-        #      within the (pcols, __salt0) bucket — ordered by the row
-        #      hash — splits them round-robin. Duplicates are
-        #      interchangeable, so the tie-break among them cannot change
-        #      the multiset of any output file: the layout is stable.
-        #      The window is bounded to ~1/__files of a hive partition,
-        #      not the whole partition, so no single-reducer skew.
-        from pyspark.sql.types import MapType
-
+        rows_per_file = max(1, df.count() * target_bytes // before["total_bytes"])
+        # xxhash64 rejects map columns, so they stay out of the sort key
+        # (the partition columns are never maps, so the key is never empty).
         hashable = [
-            c for c, f in zip(df.columns, df.schema.fields)
-            if not isinstance(f.dataType, MapType)
+            f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
         ]
-        row_hash = (
-            F.xxhash64(*[F.col(c) for c in hashable])
-            if hashable
-            else F.lit(0).cast("long")
-        )
-        joined = (
-            ddf.join(F.broadcast(cdf), cond)
-            .select(*[F.col(f"__d.{x}") for x in df.columns], F.col("__c.__files"))
-            .withColumn("__rhash", row_hash)
-            .withColumn("__salt0", F.pmod(F.col("__rhash"), F.col("__files")))
-        )
-        w_dup = W.partitionBy(*pcols, "__salt0").orderBy("__rhash")
-        salted = joined.withColumn(
-            "__salt",
-            F.pmod(
-                F.col("__salt0") + F.row_number().over(w_dup), F.col("__files")
-            ),
-        ).drop("__rhash", "__salt0")
         (
-            salted.repartition(n, *[F.col(c) for c in pcols], F.col("__salt"))
-            .drop("__files", "__salt")
+            df.repartition(n, *partition_cols)
+            .sortWithinPartitions(*partition_cols, F.xxhash64(*hashable))
             .write.mode("overwrite")
-            .partitionBy(*pcols)
+            .option("maxRecordsPerFile", rows_per_file)
+            .partitionBy(*partition_cols)
             .parquet(out_path)
         )
     else:

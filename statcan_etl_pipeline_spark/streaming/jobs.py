@@ -30,15 +30,6 @@ from ..functions.portable import cents, money_sum
 from ..operators.incremental import latest_revision, merge_latest_by, scd2_history, upsert
 
 
-def _with_event_time(stream: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize the event-time column to TIMESTAMP. Spark 4 parquet
-    schema inference yields TIMESTAMP_NTZ, which `withWatermark` rejects
-    (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); with the session TZ pinned to
-    UTC the cast is value-preserving, and Catalyst removes it entirely
-    when the column is already TIMESTAMP."""
-    return stream.withColumn(col, F.col(col).cast("timestamp"))
-
-
 def events_stream(spark: SparkSession, sf_dir: str, source_dir: str) -> DataFrame:
     """File-based stream of the parquet files in `source_dir` (one file =
     one micro-batch source), read with the `events` table's schema."""
@@ -48,7 +39,7 @@ def events_stream(spark: SparkSession, sf_dir: str, source_dir: str) -> DataFram
 def windowed_counts(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling 1-hour counts/sums by event type."""
     return (
-        _with_event_time(stream).withWatermark("ts", watermark)
+        stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), money_sum("value").alias("total_value"))
         .select(
@@ -64,7 +55,7 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = 
     """Gap-based session aggregation with the state-store-backed
     `session_window` (the streaming twin of operators.temporal.sessionize)."""
     return (
-        _with_event_time(stream).withWatermark("ts", watermark)
+        stream.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", F.col("w.start").alias("start_ts"), F.col("w.end").alias("end_ts"), "n_events")
@@ -74,7 +65,6 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = 
 def _purchases_after_views(stream: DataFrame, watermark: str, how: str) -> DataFrame:
     """Purchases joined (`how`) to same-user views in the preceding hour,
     both sides watermarked."""
-    stream = _with_event_time(stream)
     views = (
         stream.filter(F.col("event_type") == "view")
         .select(
@@ -157,8 +147,7 @@ def deduped_stream(
     — plain dropDuplicates on a stream grows state forever, which is the
     classic 100-TB streaming-dedup failure mode."""
     return (
-        _with_event_time(stream, event_time_col)
-        .withWatermark(event_time_col, watermark)
+        stream.withWatermark(event_time_col, watermark)
         .dropDuplicatesWithinWatermark(keys)
     )
 
@@ -324,7 +313,7 @@ def enriched_stream(
     buffer the stream in the state store for no reason). At scale the
     dimension refresh cadence = micro-batch cadence; for slowly
     changing dims snapshot the dim table per batch via foreachBatch."""
-    return _with_event_time(stream).join(F.broadcast(dim), key, how)
+    return stream.join(F.broadcast(dim), key, how)
 
 
 def incremental_agg_batch(
@@ -407,8 +396,7 @@ def chained_windowed_max(stream: DataFrame, watermark: str = "2 hours") -> DataF
     retained in state, not emitted (Spark rejects 'complete' here via
     the global-watermark correctness check)."""
     q15 = (
-        _with_event_time(stream)
-        .withWatermark("ts", watermark)
+        stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "15 minutes").alias("w15"), "event_type")
         .agg(F.count(F.lit(1)).alias("n15"))
     )

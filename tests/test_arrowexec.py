@@ -10,11 +10,7 @@ from __future__ import annotations
 
 from statcan_etl_pipeline_spark.registry import QUERIES
 
-
-def _plan(spark, name, sf_dir) -> str:
-    return (
-        QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    )
+from .helpers import executed_plan
 
 
 def test_cogrouped_asof_matches_jvm_asof(spark, sf_small):
@@ -34,13 +30,13 @@ def test_cogrouped_asof_matches_jvm_asof(spark, sf_small):
 
 
 def test_cogrouped_asof_plan_has_cogroup_node(spark, sf_small):
-    plan = _plan(spark, "asof_join_cogrouped", sf_small)
+    plan = executed_plan(spark, "asof_join_cogrouped", sf_small)
     assert "FlatMapCoGroupsInPandas" in plan, plan
     assert "CartesianProduct" not in plan
 
 
 def test_map_in_arrow_plan_has_arrow_node(spark, sf_small):
-    plan = _plan(spark, "doc_token_arrow_stats", sf_small)
+    plan = executed_plan(spark, "doc_token_arrow_stats", sf_small)
     assert "MapInArrow" in plan, plan
     # the per-source aggregation still gets a map-side partial combine
     assert "partial_" in plan
@@ -49,7 +45,7 @@ def test_map_in_arrow_plan_has_arrow_node(spark, sf_small):
 def test_map_in_arrow_prunes_unused_columns(spark, sf_small):
     """The documents scan under mapInArrow must read only (source,
     text) — lang / n_chars / doc_id stay pruned."""
-    plan = _plan(spark, "doc_token_arrow_stats", sf_small)
+    plan = executed_plan(spark, "doc_token_arrow_stats", sf_small)
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read and all("n_chars" not in ln and "lang" not in ln for ln in read)
 

@@ -219,25 +219,29 @@ def test_compaction_plan_properties():
     check()
 
 
-def test_compaction_salt_is_reproducible(spark, sf_small, tmp_path):
-    """The content-derived salt makes the partitioned-compaction output
-    layout deterministic: compacting the same input twice produces
-    identical per-file row multisets (the verdict criterion for
-    replacing the monotonically_increasing_id salt, whose assignment
-    could drift on task retry / partition-layout change). Exact
-    duplicates are still spread by the row_number splitter."""
+def test_compaction_layout_is_a_function_of_content(spark, sf_small, tmp_path):
+    """Partitioned compaction's output layout depends only on the rows:
+    the same rows, stored in two different file layouts and read back in
+    different orders, compact to identical per-file row multisets. (A
+    layout that followed the input order would drift with the input's
+    file layout, shuffle fetch order and task retries.)"""
     orders = load_table(spark, sf_small, "orders").withColumn(
         "bucket", F.when(F.col("o_orderkey") % 20 == 0, "small").otherwise("big")
     )
-    src = str(tmp_path / "salt_src")
-    orders.repartition(8).write.mode("overwrite").partitionBy("bucket").parquet(src)
-    total = sum(sz for _, sz in list_data_files(spark, src))
-    target = max(total // 6, 1)
+    inputs = {
+        "hashed": orders.repartition(8),
+        "desc": orders.orderBy(F.desc("o_orderkey")).coalesce(3),
+    }
 
     def layout(name: str) -> list:
-        out = str(tmp_path / name)
+        src = str(tmp_path / f"{name}_src")
+        out = str(tmp_path / f"{name}_out")
+        inputs[name].write.mode("overwrite").partitionBy("bucket").parquet(src)
+        total = sum(sz for _, sz in list_data_files(spark, src))
+        # 1/6 of this input's bytes, rounded up: the row budget is then
+        # rows // 6 for both inputs, whatever their byte totals
         compact_parquet(
-            spark, src, out, target_bytes=target, partition_cols=["bucket"]
+            spark, src, out, target_bytes=-(-total // 6), partition_cols=["bucket"]
         )
         per_file = []
         for p, _ in sorted(list_data_files(spark, out)):
@@ -248,4 +252,27 @@ def test_compaction_salt_is_reproducible(spark, sf_small, tmp_path):
         # (partition, row-content) file payloads
         return sorted(per_file)
 
-    assert layout("salt_out0") == layout("salt_out1")
+    hashed = layout("hashed")
+    assert len(hashed) > 2, hashed  # the "big" partition really is cut
+    assert hashed == layout("desc")
+
+
+def test_compaction_keeps_map_columns(spark, tmp_path):
+    """A map column cannot be hashed (xxhash64 rejects MapType), so it
+    stays out of the row-hash sort key; the rows still all come back."""
+    src = str(tmp_path / "frag_map_src")
+    out = str(tmp_path / "compact_map_out")
+    df = spark.range(0, 1000).select(
+        F.col("id"),
+        (F.col("id") % 3).alias("bucket"),
+        F.create_map(F.lit("k"), F.col("id")).alias("attrs"),
+    )
+    df.repartition(8).write.mode("overwrite").partitionBy("bucket").parquet(src)
+    total = sum(sz for _, sz in list_data_files(spark, src))
+    compact_parquet(
+        spark, src, out, target_bytes=max(total // 4, 1), partition_cols=["bucket"]
+    )
+    back = spark.read.parquet(out)
+    assert sorted((r["id"], r["bucket"], r["attrs"]["k"]) for r in back.collect()) == [
+        (i, i % 3, i) for i in range(1000)
+    ]

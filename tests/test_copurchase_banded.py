@@ -21,6 +21,8 @@ from statcan_etl_pipeline_spark.queries.graph import (  # noqa: E402
     copurchase_wedge_similarity,
 )
 
+from .helpers import executed_plan
+
 
 def _rows(df):
     return {tuple(r) for r in df.collect()}
@@ -50,18 +52,12 @@ def test_banded_subset_and_recall_vs_wedge(spark, request, sf_fixture, recall_fl
     assert recall >= recall_floor, (len(banded), len(exact), recall)
 
 
-def _plan(spark, name, sf_dir) -> str:
-    return (
-        QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    )
-
-
 def test_banded_plan_has_no_wedge_stream(spark, sf_small):
     """The r12 rewrite's whole point: no wedge enumeration anywhere in
     the plan. The wedge twin's signature constructs (the ordered-tail
     slice/transform explode) must be absent; the exact verify runs as
     array_intersect on the two adjacency arrays; joins stay equi."""
-    plan = _plan(spark, "copurchase_part_similarity", sf_small)
+    plan = executed_plan(spark, "copurchase_part_similarity", sf_small)
     assert "slice(ns" not in plan, "wedge tail-slice explode crept back in"
     assert "array_intersect" in plan
     assert "CartesianProduct" not in plan
@@ -72,7 +68,7 @@ def test_band_census_plan_has_no_pair_join(spark, sf_small):
     """The census reports bucket sizes only — it must never generate
     candidate pairs (no self-join of the banded index) and its
     bucket-size aggregate must partial-combine map-side."""
-    plan = _plan(spark, "copurchase_band_census", sf_small)
+    plan = executed_plan(spark, "copurchase_band_census", sf_small)
     assert "array_intersect" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -184,7 +180,7 @@ def test_minhash_calibration_contract(spark, request, sf_fixture):
 def test_minhash_calibration_plan(spark, sf_small):
     """One signature aggregation feeds bands and both probe sides; no
     cartesian/NLJ; the banded self-join is the only pair generator."""
-    plan = _plan(spark, "copurchase_minhash_calibration", sf_small)
+    plan = executed_plan(spark, "copurchase_minhash_calibration", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "zip_with" in plan

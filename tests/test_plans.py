@@ -7,6 +7,8 @@ import pytest
 
 from statcan_etl_pipeline_spark.registry import QUERIES
 
+from .helpers import executed_plan
+
 _TABLES = (
     "customer", "orders", "lineitem", "part", "supplier",
     "nation", "region", "events", "documents", "embeddings",
@@ -55,54 +57,45 @@ def _broadcast_scan_tables(spark, name, sf_dir) -> set[str]:
     return found
 
 
-def _plan(spark, name, sf_dir) -> str:
-    return (
-        QUERIES[name](spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-
-
 def test_q1_filter_pushed_to_parquet_scan(spark, sf_small):
-    plan = _plan(spark, "q1_pricing_summary", sf_small)
+    plan = executed_plan(spark, "q1_pricing_summary", sf_small)
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
 def test_q1_column_pruning(spark, sf_small):
-    plan = _plan(spark, "q1_pricing_summary", sf_small)
+    plan = executed_plan(spark, "q1_pricing_summary", sf_small)
     read = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read and all("l_orderkey" not in ln for ln in read)  # unused col not read
 
 
 def test_q5_dim_joins_are_broadcast(spark, sf_small):
-    plan = _plan(spark, "q5_local_supplier_volume", sf_small)
+    plan = executed_plan(spark, "q5_local_supplier_volume", sf_small)
     assert plan.count("BroadcastHashJoin") >= 3  # supplier, nation, region
     assert "CartesianProduct" not in plan
 
 
 def test_topk_uses_take_ordered_not_global_sort(spark, sf_small):
-    plan = _plan(spark, "topk_customers_by_revenue", sf_small)
+    plan = executed_plan(spark, "topk_customers_by_revenue", sf_small)
     assert "TakeOrderedAndProject" in plan
 
 
 def test_q1_partial_aggregation(spark, sf_small):
-    plan = _plan(spark, "q1_pricing_summary", sf_small)
+    plan = executed_plan(spark, "q1_pricing_summary", sf_small)
     assert "partial_" in plan  # map-side combine before the shuffle
 
 
 def test_shingle_join_no_cartesian(spark, sf_small):
-    plan = _plan(spark, "dedup_ngram_jaccard", sf_small)
+    plan = executed_plan(spark, "dedup_ngram_jaccard", sf_small)
     assert "CartesianProduct" not in plan
 
 
 def test_minhash_single_agg_shuffle(spark, sf_small):
-    plan = _plan(spark, "dedup_minhash_lsh", sf_small)
+    plan = executed_plan(spark, "dedup_minhash_lsh", sf_small)
     assert "CartesianProduct" not in plan
 
 
 def test_asof_join_is_window_not_inequality_join(spark, sf_small):
-    plan = _plan(spark, "asof_join_purchase_to_view", sf_small)
+    plan = executed_plan(spark, "asof_join_purchase_to_view", sf_small)
     assert "RunningWindowFunction" in plan or "Window" in plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
@@ -296,7 +289,7 @@ def test_sharded_packing_row_window_partitions_by_shard(spark, sf_small):
     window (the one ordered by doc_id) must partition by
     (source, shard), never by source alone — a source-only partition
     serializes each source through one task."""
-    plan = _plan(spark, "doc_greedy_packing_sharded", sf_small)
+    plan = executed_plan(spark, "doc_greedy_packing_sharded", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "doc_id" in ln]
     assert row_wins, plan
@@ -310,7 +303,7 @@ def test_abc_cumulative_window_partitions_by_shard(spark, sf_small):
     global orderBy window — that would drag every part through a
     single task. The only partition-less windows allowed are the ones
     over the tiny K-row shard-totals aggregate (`shard_rev`)."""
-    plan = _plan(spark, "abc_part_classification", sf_small)
+    plan = executed_plan(spark, "abc_part_classification", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     part_wins = [ln for ln in wins if "rev_c" in ln and "shard_rev" not in ln]
     assert part_wins, plan
@@ -322,7 +315,7 @@ def test_transition_matrix_single_user_shuffle_no_global_window(spark, sf_small)
     """events_user_transitions: the lead() window partitions by
     user_id (never an empty partitionBy), and the from_total join is
     a broadcast — no second full-data shuffle."""
-    plan = _plan(spark, "events_user_transitions", sf_small)
+    plan = executed_plan(spark, "events_user_transitions", sf_small)
     n_windows = plan.count("windowspecdefinition(")
     assert n_windows >= 1
     assert plan.count("windowspecdefinition(user_id#") == n_windows
@@ -334,14 +327,14 @@ def test_kmeans_assignment_no_join_no_cartesian(spark, sf_small):
     """embedding_kmeans: nearest-centroid assignment is a pure
     projection over broadcast literal centroids — the final plan has
     no join of any kind and aggregates with map-side partials."""
-    plan = _plan(spark, "embedding_kmeans", sf_small)
+    plan = executed_plan(spark, "embedding_kmeans", sf_small)
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
     assert "partial_" in plan
 
 
 def test_range_search_broadcasts_query_set(spark, sf_small):
-    plan = _plan(spark, "ann_range_search", sf_small)
+    plan = executed_plan(spark, "ann_range_search", sf_small)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -349,7 +342,7 @@ def test_range_search_broadcasts_query_set(spark, sf_small):
 def test_centroids_by_label_partial_aggregation(spark, sf_small):
     """posexplode fan-out aggregates map-side before the single
     (label, pos) shuffle."""
-    plan = _plan(spark, "embedding_centroids_by_label", sf_small)
+    plan = executed_plan(spark, "embedding_centroids_by_label", sf_small)
     assert "partial_" in plan
     assert "Exchange" in plan
 
@@ -362,7 +355,7 @@ def test_pagerank_rank_state_is_broadcast_per_iteration(spark, sf_small):
     so the visible plan is the LAST iteration — identical by
     construction to the hidden ones — reading the prior state from
     checkpoint scans, with no lineitem file scan re-derivation."""
-    plan = _plan(spark, "graph_pagerank", sf_small)
+    plan = executed_plan(spark, "graph_pagerank", sf_small)
     assert plan.count("BroadcastHashJoin") >= 1  # the rank join, last iter
     assert "ExistingRDD" in plan  # prior iterations feed in as checkpoints
     assert "CartesianProduct" not in plan
@@ -376,7 +369,7 @@ def test_global_shuffle_rank_window_partitions_by_bucket(spark, sf_small):
     """doc_global_shuffle's per-row rank window must partition by the
     256-value hash bucket; the only partition-less window allowed is
     the exclusive prefix sum over the 256-row bucket-count aggregate."""
-    plan = _plan(spark, "doc_global_shuffle", sf_small)
+    plan = executed_plan(spark, "doc_global_shuffle", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "skey" in ln]
     assert row_wins, plan
@@ -388,7 +381,7 @@ def test_gini_rank_window_partitions_by_bucket(spark, sf_small):
     """gini_customer_revenue ranks customers inside 256 value-range
     buckets (two-pass prefix sum), never through one global orderBy
     window over the customer table."""
-    plan = _plan(spark, "gini_customer_revenue", sf_small)
+    plan = executed_plan(spark, "gini_customer_revenue", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "o_custkey" in ln]
     assert row_wins, plan
@@ -400,7 +393,7 @@ def test_unigram_rarity_vocab_join_is_broadcast(spark, sf_small):
     """The vocab (token->freq) side of doc_unigram_rarity's per-token
     join must broadcast — shuffling the exploded token stream on word
     would dominate the query at corpus scale."""
-    plan = _plan(spark, "doc_unigram_rarity", sf_small)
+    plan = executed_plan(spark, "doc_unigram_rarity", sf_small)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -409,7 +402,7 @@ def test_pareto_frontier_windows_partition_by_bucket(spark, sf_small):
     """pareto_frontier_parts computes strict-predecessor max inside 256
     value-range buckets; per-row windows must partition by bucket (the
     only partition-less window is the 256-row cross-bucket prefix max)."""
-    plan = _plan(spark, "pareto_frontier_parts", sf_small)
+    plan = executed_plan(spark, "pareto_frontier_parts", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "price_c" in ln and "p_size" in ln]
     assert row_wins, plan
@@ -421,7 +414,7 @@ def test_triangle_census_no_cartesian(spark, sf_small):
     """Edge build, wedge join, and wedge closing are all equi-joins —
     a CartesianProduct or nested-loop join anywhere means the degree-
     ordered node-iterator degenerated to all-pairs."""
-    plan = _plan(spark, "part_copurchase_triangles", sf_small)
+    plan = executed_plan(spark, "part_copurchase_triangles", sf_small)
     assert "CartesianProduct" not in plan
     # the only BroadcastNestedLoopJoins allowed are the singleton-
     # aggregate crossJoins stitching the final 1-row summary together
@@ -447,7 +440,7 @@ def test_triangle_census_edge_iterator_no_wedge_stream(spark, sf_small):
     switch to eager checkpointing could flip them without a real
     regression. If they flake after an upgrade, re-assert on the
     analyzed plan's logical operators instead."""
-    plan = _plan(spark, "part_copurchase_triangles", sf_small)
+    plan = executed_plan(spark, "part_copurchase_triangles", sf_small)
     assert "array_intersect" in plan, plan
     assert "LeftSemi" not in plan, plan
     gens = [ln for ln in plan.splitlines() if "Generate explode(slice(" in ln]
@@ -463,7 +456,7 @@ def test_kcore_edge_set_shrinks_not_rejoins(spark, sf_small):
     original lineitem self-join appears only beneath the FIRST
     checkpoint, so the final stitched plan contains NO lineitem file
     scan at all (every branch hangs off checkpoint scans)."""
-    plan = _plan(spark, "part_kcore_decomposition", sf_small)
+    plan = executed_plan(spark, "part_kcore_decomposition", sf_small)
     assert "ExistingRDD" in plan, plan
     scans = [ln for ln in plan.splitlines()
              if "FileScan" in ln and "lineitem" in ln]
@@ -498,13 +491,13 @@ def test_kcore_removed_set_broadcast_guard(spark):
 def test_chi2_margin_joins_are_broadcast(spark, sf_small):
     """Row/column margins and the grand total are tiny aggregates of the
     contingency table — they must broadcast back, never shuffle it."""
-    plan = _plan(spark, "chi2_segment_priority", sf_small)
+    plan = executed_plan(spark, "chi2_segment_priority", sf_small)
     assert plan.count("BroadcastHashJoin") >= 2
 
 
 def test_strict_funnel_window_partitions_by_user(spark, sf_small):
     """lead() windows run per user — no global event-ordered window."""
-    plan = _plan(spark, "events_strict_funnel_pattern", sf_small)
+    plan = executed_plan(spark, "events_strict_funnel_pattern", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     assert wins, plan
     for ln in wins:
@@ -513,7 +506,7 @@ def test_strict_funnel_window_partitions_by_user(spark, sf_small):
 
 def test_supplier_share_rank_window_partitions_by_nation(spark, sf_small):
     """The share/rank window runs per nation — bounded partitions."""
-    plan = _plan(spark, "supplier_share_of_nation", sf_small)
+    plan = executed_plan(spark, "supplier_share_of_nation", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     assert wins, plan
     for ln in wins:
@@ -523,14 +516,14 @@ def test_supplier_share_rank_window_partitions_by_nation(spark, sf_small):
 def test_ltv_cohort_partial_aggregation(spark, sf_small):
     """Both the first-order reduce and the cohort-cell aggregate must
     map-side combine before their shuffles."""
-    plan = _plan(spark, "customer_ltv_cohort", sf_small)
+    plan = executed_plan(spark, "customer_ltv_cohort", sf_small)
     assert "partial_" in plan
 
 
 def test_udtf_lateral_join_is_python_udtf_node(spark, sf_small):
     """The UDTF surface actually lowers to a Python UDTF evaluation
     node (Arrow-batched when available), not a collect-and-reexplode."""
-    plan = _plan(spark, "udtf_token_positions", sf_small)
+    plan = executed_plan(spark, "udtf_token_positions", sf_small)
     assert "UDTF" in plan, plan
 
 
@@ -538,7 +531,7 @@ def test_weighted_median_windows_partition_by_brand_bucket(spark, sf_small):
     """The per-row cumulative-weight window must partition by
     (brand, price bucket); the only brand-level windows run over the
     ≤256-row bucket summary."""
-    plan = _plan(spark, "weighted_median_price_by_brand", sf_small)
+    plan = executed_plan(spark, "weighted_median_price_by_brand", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "p_partkey" in ln]
     assert row_wins, plan
@@ -548,7 +541,7 @@ def test_weighted_median_windows_partition_by_brand_bucket(spark, sf_small):
 
 def test_copurchase_similarity_no_cartesian_and_no_bnlj(spark, sf_small):
     """The wedge self-join and degree joins must stay equi-joins."""
-    plan = _plan(spark, "copurchase_part_similarity", sf_small)
+    plan = executed_plan(spark, "copurchase_part_similarity", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -556,7 +549,7 @@ def test_copurchase_similarity_no_cartesian_and_no_bnlj(spark, sf_small):
 def test_novelty_is_aggregate_plus_equijoin(spark, sf_small):
     """First-occurrence novelty must not contain any pairwise join —
     one aggregate over the inverted index plus one equi-join back."""
-    plan = _plan(spark, "doc_novelty_by_order", sf_small)
+    plan = executed_plan(spark, "doc_novelty_by_order", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "partial_" in plan  # map-side combine on the min(doc_id) agg
@@ -565,7 +558,7 @@ def test_novelty_is_aggregate_plus_equijoin(spark, sf_small):
 def test_ohlc_is_single_aggregation_no_window(spark, sf_small):
     """OHLC bars run as ONE partial-aggregated groupBy (min_by/max_by
     struct keys), never as a fact-table window."""
-    plan = _plan(spark, "events_ohlc_hourly", sf_small)
+    plan = executed_plan(spark, "events_ohlc_hourly", sf_small)
     assert "partial_" in plan
     assert "RunningWindowFunction" not in plan
     # exactly one wide shuffle for the aggregation (+1 for final sort)
@@ -573,7 +566,7 @@ def test_ohlc_is_single_aggregation_no_window(spark, sf_small):
 
 
 def test_interclass_similarity_small_side_broadcasts(spark, sf_small):
-    plan = _plan(spark, "embedding_interclass_similarity", sf_small)
+    plan = executed_plan(spark, "embedding_interclass_similarity", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
@@ -592,7 +585,7 @@ def test_per_doc_outputs_have_no_trailing_global_sort(spark, sf_small):
         "doc_unigram_rarity",
         "statcan_latest_revision",
     ]:
-        plan = _plan(spark, name, sf_small)
+        plan = executed_plan(spark, name, sf_small)
         first_lines = "\n".join(plan.splitlines()[:6])
         # a trailing global sort shows as a rangepartitioning Exchange
         # feeding a Sort at the very top of the plan
@@ -604,7 +597,7 @@ def test_ks_rank_window_partitions_by_bucket(spark, sf_small):
     values inside 256 range buckets (two-pass prefix sum); per-value
     windows must partition by bucket — never one global orderBy window
     over the distinct-value set."""
-    plan = _plan(spark, "ks_order_value_by_priority", sf_small)
+    plan = executed_plan(spark, "ks_order_value_by_priority", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "c1" in ln or "c2" in ln]
     assert row_wins, plan
@@ -616,7 +609,7 @@ def test_x11_trend_offset_join_no_cartesian(spark, sf_small):
     """statcan_x11_trend's +/-6 month fan-out must be an equi-join on
     (priority, ord+k) over the bounded monthly aggregate — no
     cartesian/nested-loop product anywhere in the plan."""
-    plan = _plan(spark, "statcan_x11_trend", sf_small)
+    plan = executed_plan(spark, "statcan_x11_trend", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -624,7 +617,7 @@ def test_x11_trend_offset_join_no_cartesian(spark, sf_small):
 def test_rca_dim_joins_broadcast_no_second_fact_scan(spark, sf_small):
     """nation_type_rca broadcasts all three dimension joins and reads
     the lineitem fact exactly once (margins re-aggregate from cells)."""
-    plan = _plan(spark, "nation_type_rca", sf_small)
+    plan = executed_plan(spark, "nation_type_rca", sf_small)
     assert "CartesianProduct" not in plan
     scans = [
         ln
@@ -638,7 +631,7 @@ def test_raking_margin_joins_broadcast(spark, sf_small):
     """survey_raking_calibration joins per-pass margin sums and targets
     back to the sample as broadcasts (bounded region/segment tables);
     no cartesian product anywhere."""
-    plan = _plan(spark, "survey_raking_calibration", sf_small)
+    plan = executed_plan(spark, "survey_raking_calibration", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
 
@@ -647,7 +640,7 @@ def test_rolling_actives_no_fact_window(spark, sf_small):
     """events_rolling_7d_active_users must contain NO window function at
     all — the rolling distinct is the 7x fan-out + distinct-count
     rewrite, never a window frame over the event stream."""
-    plan = _plan(spark, "events_rolling_7d_active_users", sf_small)
+    plan = executed_plan(spark, "events_rolling_7d_active_users", sf_small)
     assert "windowspecdefinition" not in plan
 
 
@@ -655,7 +648,7 @@ def test_spearman_rank_windows_partition_by_bucket(spark, sf_small):
     """spearman_price_acctbal's midranks must come from bucket-partitioned
     windows (two-pass prefix sum) — never one global window over the
     distinct-value sets of either variable."""
-    plan = _plan(spark, "spearman_price_acctbal", sf_small)
+    plan = executed_plan(spark, "spearman_price_acctbal", sf_small)
     wins = [ln for ln in plan.splitlines() if "windowspecdefinition" in ln]
     row_wins = [ln for ln in wins if "c1" in ln or "c2" in ln]
     assert row_wins, plan
@@ -666,7 +659,7 @@ def test_spearman_rank_windows_partition_by_bucket(spark, sf_small):
 def test_chained_fisher_no_cartesian(spark, sf_small):
     """price_index_chained_fisher's month-to-month link join must be an
     equi-join on (part, month-1); no nested-loop anywhere."""
-    plan = _plan(spark, "price_index_chained_fisher", sf_small)
+    plan = executed_plan(spark, "price_index_chained_fisher", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -675,14 +668,14 @@ def test_cooccurrence_no_cartesian(spark, sf_small):
     """events_type_cooccurrence's pair explode is the per-user equi
     self-join on user_id; margins broadcast; no cartesian except the
     1-row totals crossJoin."""
-    plan = _plan(spark, "events_type_cooccurrence", sf_small)
+    plan = executed_plan(spark, "events_type_cooccurrence", sf_small)
     assert "CartesianProduct" not in plan
 
 
 def test_attribution_banded_join_no_cartesian(spark, sf_small):
     """events_multitouch_attribution's touch lookup must be the banded
     equi-join (user, hour-band) — no fact-by-fact nested loop."""
-    plan = _plan(spark, "events_multitouch_attribution", sf_small)
+    plan = executed_plan(spark, "events_multitouch_attribution", sf_small)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -691,7 +684,7 @@ def test_denton_year_aggregates_broadcast(spark, sf_small):
     """statcan_denton_prorata joins its two yearly benchmark aggregates
     back to the monthly indicator as broadcasts — the monthly side must
     never shuffle for a join against a ~7-row aggregate."""
-    plan = _plan(spark, "statcan_denton_prorata", sf_small)
+    plan = executed_plan(spark, "statcan_denton_prorata", sf_small)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
@@ -699,14 +692,14 @@ def test_denton_year_aggregates_broadcast(spark, sf_small):
 def test_feature_hash_no_udf_in_plan(spark, sf_small):
     """doc_feature_hash_embedding's hashing trick must stay JVM-side —
     no Python evaluation nodes anywhere."""
-    plan = _plan(spark, "doc_feature_hash_embedding", sf_small)
+    plan = executed_plan(spark, "doc_feature_hash_embedding", sf_small)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_tax_audit_single_scan(spark, sf_small):
     """lineitem_tax_audit is one aggregation pass — exactly one lineitem
     scan in the executed plan."""
-    plan = _plan(spark, "lineitem_tax_audit", sf_small)
+    plan = executed_plan(spark, "lineitem_tax_audit", sf_small)
     scans = [
         ln for ln in plan.splitlines() if "FileScan parquet" in ln and "lineitem" in ln
     ]
@@ -723,7 +716,7 @@ def test_ht_audit_no_fact_broadcast(spark, sf_small):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(spark, "survey_ht_total_audit", sf_small)
+        plan = executed_plan(spark, "survey_ht_total_audit", sf_small)
         assert "BroadcastHashJoin" not in plan, plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
     finally:
@@ -861,7 +854,7 @@ def test_registry_wide_plan_audit(spark, sf_small):
     audit to one pass over the registry."""
     bad: dict[str, list[str]] = {}
     for name in sorted(QUERIES):
-        ps = _plan(spark, name, sf_small)
+        ps = executed_plan(spark, name, sf_small)
         flags = []
         if "CartesianProduct" in ps:
             flags.append("cartesian")
@@ -886,7 +879,7 @@ def test_shingle_spectrum_bin_is_integer_derived(spark, sf_small):
     length (length(bin(df)) - 1), never floor(log2(df)) — Spark's LOG2
     is ln/ln while DuckDB's is std::log2, and a 1-ulp gap at df = 2^k
     would flip the floor cross-engine."""
-    plan = _plan(spark, "shingle_df_spectrum", sf_small)
+    plan = executed_plan(spark, "shingle_df_spectrum", sf_small)
     assert "LOG" not in plan.upper().replace("CATALOG", ""), plan
     assert "bin(" in plan, plan
 
@@ -894,7 +887,7 @@ def test_shingle_spectrum_bin_is_integer_derived(spark, sf_small):
 def test_column_profile_single_scan(spark, sf_small):
     """orders_column_profile computes every column's stats in ONE
     aggregation pass — exactly one orders scan in the executed plan."""
-    plan = _plan(spark, "orders_column_profile", sf_small)
+    plan = executed_plan(spark, "orders_column_profile", sf_small)
     scans = [
         ln for ln in plan.splitlines() if "FileScan parquet" in ln and "orders" in ln
     ]
@@ -905,7 +898,7 @@ def test_stopword_profile_no_explode(spark, sf_small):
     """text_stopword_profile counts stopwords with array HOFs inside
     the row — the token stream must never be exploded (no Generate
     node) and the per-source agg keeps a map-side partial."""
-    plan = _plan(spark, "text_stopword_profile", sf_small)
+    plan = executed_plan(spark, "text_stopword_profile", sf_small)
     assert "Generate" not in plan, plan
     assert "partial_" in plan
 
@@ -914,6 +907,6 @@ def test_hour_of_week_total_is_broadcast(spark, sf_small):
     """events_hour_of_week_profile's corpus total joins as a broadcast
     1-row aggregate — the bucketed aggregate must not shuffle again
     for it."""
-    plan = _plan(spark, "events_hour_of_week_profile", sf_small)
+    plan = executed_plan(spark, "events_hour_of_week_profile", sf_small)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan

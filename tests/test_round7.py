@@ -10,11 +10,7 @@ import duckdb
 
 from statcan_etl_pipeline_spark.registry import QUERIES
 
-
-def _plan(spark, name, sf_dir) -> str:
-    return (
-        QUERIES[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    )
+from .helpers import executed_plan
 
 
 def _cents(x: float) -> int:
@@ -200,30 +196,30 @@ def test_dsir_weights_separate_target_language(spark, sf_small):
 
 
 def test_winsorized_caps_are_broadcast(spark, sf_small):
-    plan = _plan(spark, "survey_winsorized_total", sf_small)
+    plan = executed_plan(spark, "survey_winsorized_total", sf_small)
     assert plan.count("BroadcastHashJoin") >= 2  # customer dim + 5-row caps
     assert "CartesianProduct" not in plan
 
 
 def test_jackknife_partial_agg_and_broadcast(spark, sf_small):
-    plan = _plan(spark, "survey_jackknife_variance", sf_small)
+    plan = executed_plan(spark, "survey_jackknife_variance", sf_small)
     assert "partial_" in plan  # map-side combine on the cents sums
     assert "BroadcastHashJoin" in plan and "CartesianProduct" not in plan
 
 
 def test_dsir_model_join_is_broadcast(spark, sf_small):
-    plan = _plan(spark, "doc_dsir_importance_weights", sf_small)
+    plan = executed_plan(spark, "doc_dsir_importance_weights", sf_small)
     assert "BroadcastHashJoin" in plan  # ≤256-row log-ratio model
     assert "CartesianProduct" not in plan
 
 
 def test_containment_no_cartesian(spark, sf_small):
-    plan = _plan(spark, "doc_shingle_containment", sf_small)
+    plan = executed_plan(spark, "doc_shingle_containment", sf_small)
     assert "CartesianProduct" not in plan
 
 
 def test_trigrams_single_window_shuffle(spark, sf_small):
-    plan = _plan(spark, "event_type_trigrams", sf_small)
+    plan = executed_plan(spark, "event_type_trigrams", sf_small)
     assert "CartesianProduct" not in plan and "Generate" not in plan  # no explode
 
 

@@ -17,30 +17,18 @@ spark == oracle; sf1 then closes spark == checker at the 990× decade.
 
 from __future__ import annotations
 
-import importlib.util
 import os
-import sys
 
 import numpy as np
 import pytest
 
+from .helpers import load_sf1_checker
 from .oracle import diff
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_GATE_SF_DIR", "/root/testdata/sf0.001")
 
 
-def _load_checker():
-    spec = importlib.util.spec_from_file_location(
-        "sf1_holdout_check", os.path.join(REPO, "scripts", "sf1_holdout_check.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules.setdefault("sf1_holdout_check", mod)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-chk = _load_checker()
+chk = load_sf1_checker()
 
 
 # The two embedding-pair queries' oracles are O(n²·dim) in DuckDB (the

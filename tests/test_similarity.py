@@ -281,6 +281,9 @@ def test_kmeans_matches_numpy_lloyd(spark, sf_small):
     from statcan_etl_pipeline_spark.catalog import load_table
     from statcan_etl_pipeline_spark.queries.embeddings import KM_ITERS, KM_K
 
+    from .helpers import load_sf1_checker
+
+    pround6 = load_sf1_checker().pround6
     rows = (
         load_table(spark, sf_small, "embeddings")
         .select("vec_id", "embedding")
@@ -292,11 +295,6 @@ def test_kmeans_matches_numpy_lloyd(spark, sf_small):
     def fixed_sqdist(X, c):  # int64 nano-units, rounded per term
         d = X - c[None, :]
         return np.floor(d * d * 1e9 + 0.5).astype(np.int64).sum(axis=1)
-
-    def pround6(x):
-        return np.where(
-            x >= 0, np.floor(x * 1e6 + 0.5) / 1e6, -(np.floor(-x * 1e6 + 0.5) / 1e6)
-        )
 
     cents = {int(i): X[ids == i][0] for i in sorted(ids) if i < KM_K}
     for it in range(KM_ITERS):

@@ -424,9 +424,7 @@ def test_chained_window_aggregation_matches_batch(spark, sf_small, tmp_path):
     )
     got = {tuple(r) for r in spark.table("stream_chained").collect()}
 
-    ev = load_table(spark, sf_small, "events").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
+    ev = load_table(spark, sf_small, "events")
     # append mode emits an hourly row only once the final watermark
     # (max event time − 30 min) passes the end of its hour
     wm = ev.agg(
