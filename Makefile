@@ -8,10 +8,13 @@
 # functions/), which the driver-window hash cannot see. `window` runs
 # scripts/check_window.py: every query whose code or oracle changed
 # since scripts/query_hashes.json must sit in the driver's first 50.
+# `lines` runs scripts/code_lines.py over the package outside queries/:
+# code lines per file and in total, without blanks, comments or
+# docstrings (the size figure a simplification is judged by).
 PYTEST = export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-.PHONY: test test-full selftest sweep window
+.PHONY: test test-full selftest sweep window lines
 
 test:
 	$(PYTEST)
@@ -27,3 +30,6 @@ sweep:
 
 window:
 	python scripts/check_window.py
+
+lines:
+	python scripts/code_lines.py $$(find statcan_etl_pipeline_spark -name '*.py' -not -path '*/queries/*' | sort)

@@ -36,8 +36,7 @@ from statcan_etl_pipeline_spark.streaming.jobs import (  # noqa: E402
     chained_windowed_max,
     deduped_stream,
     events_stream,
-    purchases_after_views_join,
-    purchases_after_views_outer_join,
+    purchases_after_views,
     session_counts,
     windowed_counts,
 )
@@ -116,8 +115,8 @@ def main() -> None:
     jobs = {
         "tumbling_1h": lambda s: windowed_counts(s),
         "session_window": lambda s: session_counts(s),
-        "join_inner": lambda s: purchases_after_views_join(s),
-        "join_outer": lambda s: purchases_after_views_outer_join(s),
+        "join_inner": lambda s: purchases_after_views(s),
+        "join_outer": lambda s: purchases_after_views(s, "leftOuter"),
         "dedup": lambda s: deduped_stream(s, ["event_id"]),
         "chained_windowed_max": lambda s: chained_windowed_max(s),
     }

@@ -10,15 +10,13 @@ designed for 100 TB scale.
 
 __version__ = "0.1.0"
 
-from .catalog import load_table, load_tables, register_views, scatter  # noqa: E402
+from .catalog import load_table, scatter  # noqa: E402
 from .plans.pipeline import run_pipeline  # noqa: E402
 from .session import get_spark  # noqa: E402
 
 __all__ = [
     "get_spark",
     "load_table",
-    "load_tables",
-    "register_views",
     "run_pipeline",
     "scatter",
 ]

@@ -112,17 +112,3 @@ def scatter(spark: SparkSession, df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register each table as a temp view for the SQL API."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -8,7 +8,6 @@ from .dedup import (
     lsh_bucket_census,
     lsh_candidate_pairs,
     minhash_signature,
-    minhash_signature_arrays,
 )
 from .incremental import scd2_history, snapshot_diff, upsert
 from .joins import salted_join
@@ -33,7 +32,6 @@ from .temporal import (
     asof_join_forward,
     asof_join_nearest,
     sessionize,
-    tumbling_window,
 )
 
 __all__ = [
@@ -58,13 +56,11 @@ __all__ = [
     "lsh_bucket_census",
     "lsh_candidate_pairs",
     "minhash_signature",
-    "minhash_signature_arrays",
     "salted_join",
     "scd2_history",
     "sessionize",
     "simhash_candidate_pairs",
     "snapshot_diff",
     "simhash_signatures",
-    "tumbling_window",
     "upsert",
 ]

@@ -52,32 +52,6 @@ def minhash_signature(shingled: DataFrame, n_hashes: int = N_HASHES) -> DataFram
     return shingled.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signature_arrays(
-    docs: DataFrame, shingles_col: str = "shingles", n_hashes: int = N_HASHES
-) -> DataFrame:
-    """Shuffle-free minhash: min over a multiset equals min over the
-    set, so the signature is computable per row with
-    array_min(transform(...)) — no explode, no groupBy.
-
-    MEASURED CAVEAT (sf0.1): this is ~3x SLOWER than
-    explode + partial-agg `minhash_signature` despite saving a shuffle —
-    higher-order-function lambdas are interpreted (outside whole-stage
-    codegen) and materialize n_hashes arrays per row, while the exploded
-    form runs codegen'd md5 over flat rows with map-side partial min.
-    Kept as the no-shuffle option for shuffle-constrained clusters;
-    default paths use the exploded form."""
-    cols = [F.col("doc_id")]
-    for k in range(n_hashes):
-        seed, chunk = divmod(k, 4)
-        cols.append(
-            F.expr(
-                f"array_min(transform({shingles_col}, "
-                f"s -> substr(md5('{seed}:' || s), {1 + 8 * chunk}, 8)))"
-            ).alias(f"mh_{k}")
-        )
-    return docs.select(*cols)
-
-
 def band_keys(
     signatures: DataFrame, n_hashes: int = N_HASHES, band_rows: int = BAND_ROWS
 ) -> DataFrame:
@@ -112,9 +86,9 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Distinct (doc_a, doc_b) sharing at least one LSH band.
 
-    BAND-BUCKET CAP (`max_bucket_size`, off by default): the self-join
-    emits C(n, 2) pairs per (band, key) bucket, so bucket density — not
-    row count — is what the banded join's cost tracks. On a corpus
+    BAND-BUCKET CAP (`max_bucket_size`, off by default): pair
+    generation emits C(n, 2) pairs per (band, key) bucket, so bucket
+    density — not row count — is what its cost tracks. On a corpus
     whose true near-dup density is quadratic (measured at sf1 on the
     fixed-vocabulary synthetic corpus: Σ C(n, 2) grew 92.7× for 10×
     docs, with the 74 buckets above 64 docs carrying 79% of all 1.27M
@@ -127,16 +101,10 @@ def lsh_candidate_pairs(
     pair whose only colliding band landed in a hot bucket is lost, not
     deferred. NO SILENT CAP: callers must surface the skipped mass via
     `lsh_bucket_census` (registered as the dedup_lsh_bucket_census
-    query), which upper-bounds the dropped pairs per bucket size. The
-    hot set is tiny by construction (≤ total_rows/cap buckets can
-    exceed the cap), so exclusion is a broadcast anti-join. The banded
-    index is locally checkpointed first: the hot-bucket aggregate, the
-    anti-join probe, and BOTH sides of the pair self-join consume it,
-    and AQE's exchange reuse does NOT cover the aggregate/anti-join
-    branches (measured r11 at sf0.01: 5 scans of the shingle→minhash
-    lineage without the checkpoint, 1 with — the signature computation
-    is the dominant per-row cost, so recomputing it ~4× roughly
-    doubled the capped path)."""
+    query), which upper-bounds the dropped pairs per bucket size.
+    Exclusion is a filter on each bucket's sorted doc-array length in
+    `lsh_pairs_from_index`, so the banded index has exactly one
+    consumer."""
     return lsh_pairs_from_index(
         band_keys(signatures, n_hashes, band_rows), max_bucket_size
     )
@@ -149,7 +117,7 @@ def lsh_pairs_from_index(
     """The pair-generation stage of `lsh_candidate_pairs`, split out
     (r14) so callers that build the (doc_id, band, key) index
     themselves — e.g. the copurchase queries' slim agg-time banding in
-    queries/analytics3.py, which never materializes the n_hashes
+    queries/graph.py, which never materializes the n_hashes
     minhash columns — reuse the identical capped pair emit instead of
     duplicating it. See `lsh_candidate_pairs` for the cap rationale.
 

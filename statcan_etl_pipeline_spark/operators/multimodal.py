@@ -114,14 +114,6 @@ def fake_frame_sample(df: DataFrame, stride: int = 16, max_frames: int = 4) -> D
     return df.select("doc_id", "payload").mapInPandas(gen, schema=FRAMES_SCHEMA)
 
 
-def real_decode_image(df: DataFrame) -> DataFrame:
-    """Placeholder for a real image decoder (PIL not available here)."""
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv, not present in this environment; "
-        "use fake_decode_features for plumbing tests"
-    )
-
-
 def ingest_binary_files(
     spark,
     path: str,

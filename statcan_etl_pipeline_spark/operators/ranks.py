@@ -14,7 +14,7 @@ bounded:
    (a bounded single-partition window), broadcast back.
 
 global_rank = band_offset + in-band row_number — bit-identical to the
-global sort. Used by doc_rrf_quality_fusion (queries/curation4.py); the
+global sort. Used by doc_rrf_quality_fusion (queries/curation.py); the
 equivalence is property-pinned on adversarial distributions in
 tests/test_operators.py.
 """

@@ -143,12 +143,6 @@ def sessionize(
     )
 
 
-def tumbling_window(df: DataFrame, ts: str, duration: str = "1 hour") -> Column:
-    """Epoch-aligned tumbling window start for grouping (batch parity of
-    the Structured Streaming `window()` aggregation)."""
-    return F.window(F.col(ts), duration)["start"]
-
-
 def asof_join_forward(
     left: DataFrame,
     right: DataFrame,

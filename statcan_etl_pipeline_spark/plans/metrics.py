@@ -106,8 +106,7 @@ def streaming_state_metrics(query) -> dict[str, dict[str, int]]:
     state store is the thing that kills a 100 TB stream weeks after it
     ships. Tests pin a bound on these numbers (tests/test_streaming.py)
     so a watermark regression fails CI the way a shuffle-budget
-    regression already does. Works on both StreamingQueryProgress
-    objects (Spark 4) and raw progress dicts.
+    regression already does.
 
     Progress entries are deduplicated by batchId before aggregating:
     `lastProgress` is normally already the final element of
@@ -118,22 +117,14 @@ def streaming_state_metrics(query) -> dict[str, dict[str, int]]:
     out: dict[str, dict[str, int]] = {}
     seen_batches: set = set()
     for p in list(query.recentProgress) + ([query.lastProgress] if query.lastProgress else []):
-        batch_id = p["batchId"] if isinstance(p, dict) else p.batchId
-        if batch_id in seen_batches:
+        if p["batchId"] in seen_batches:
             continue
-        seen_batches.add(batch_id)
-        ops = p["stateOperators"] if isinstance(p, dict) else p.stateOperators
-        for i, op in enumerate(ops):
-            if isinstance(op, dict):
-                name = op.get("operatorName") or f"op_{i}"
-                rows = op.get("numRowsTotal", 0) or 0
-                mem = op.get("memoryUsedBytes", 0) or 0
-                dropped = op.get("numRowsDroppedByWatermark", 0) or 0
-            else:
-                name = getattr(op, "operatorName", None) or f"op_{i}"
-                rows = getattr(op, "numRowsTotal", 0) or 0
-                mem = getattr(op, "memoryUsedBytes", 0) or 0
-                dropped = getattr(op, "numRowsDroppedByWatermark", 0) or 0
+        seen_batches.add(p["batchId"])
+        for i, op in enumerate(p["stateOperators"]):
+            name = op.get("operatorName") or f"op_{i}"
+            rows = op.get("numRowsTotal", 0) or 0
+            mem = op.get("memoryUsedBytes", 0) or 0
+            dropped = op.get("numRowsDroppedByWatermark", 0) or 0
             cur = out.setdefault(name, {"rows": 0, "bytes": 0, "rows_dropped_by_watermark": 0})
             cur["rows"] = max(cur["rows"], int(rows))
             cur["bytes"] = max(cur["bytes"], int(mem))

@@ -71,7 +71,6 @@ def run_pipeline(spec: Mapping[str, Any], tables: Mapping[str, DataFrame]) -> Da
                 step["path"],
                 partition_cols=step.get("partition_by"),
                 mode=step.get("mode", "overwrite"),
-                target_partitions=step.get("target_partitions"),
             )
         else:
             raise ValueError(f"pipeline step {i}: unknown op {op!r}")

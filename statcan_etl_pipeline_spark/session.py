@@ -15,15 +15,13 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "statcan-etl-pipeline-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", min(os.cpu_count() or 4, 32)))
-    shuffle_partitions = int(shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

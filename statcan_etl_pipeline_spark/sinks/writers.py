@@ -3,8 +3,9 @@
 At 100 TB the write layout IS the read performance: partition columns
 give partition pruning on read; bucketing co-locates join keys so
 downstream joins skip the shuffle entirely. Target file size matters
-too — aim for 128 MB–1 GB files via repartition before write, never
-thousands of kilobyte files."""
+too — aim for 128 MB–1 GB files, never thousands of kilobyte files:
+size the write with the pipeline's `repartition` step, or rewrite a
+landed table with `sinks.compaction.compact_parquet`."""
 
 from __future__ import annotations
 
@@ -16,14 +17,7 @@ def write_partitioned_parquet(
     path: str,
     partition_cols: list[str] | None = None,
     mode: str = "overwrite",
-    target_partitions: int | None = None,
 ) -> None:
-    if target_partitions:
-        df = (
-            df.repartition(target_partitions, *partition_cols)
-            if partition_cols
-            else df.repartition(target_partitions)
-        )
     writer = df.write.mode(mode)
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

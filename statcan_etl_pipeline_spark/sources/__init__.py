@@ -1,6 +1,7 @@
-"""Sources: schema-enforced parquet/CSV/JSON readers (with malformed-row
-quarantine + mergeSchema evolution), the StatCan-WDS long-format reader,
-and the Kafka-shaped record parser."""
+"""Sources: schema-enforced CSV/JSON readers (with malformed-row
+quarantine), the mergeSchema parquet reader for evolving files, the
+StatCan-WDS long-format reader, and the Kafka-shaped record parser.
+Star-table parquet reads go through `catalog.load_table`."""
 
 from .kafka_shape import kafka_events_stream, parse_kafka_events
 from .readers import (
@@ -8,7 +9,6 @@ from .readers import (
     read_csv_with_quarantine,
     read_json,
     read_json_with_quarantine,
-    read_parquet,
     read_parquet_evolving,
 )
 from .statcan_wds import (
@@ -27,7 +27,6 @@ __all__ = [
     "read_csv_with_quarantine",
     "read_json",
     "read_json_with_quarantine",
-    "read_parquet",
     "read_parquet_evolving",
     "parse_kafka_events",
     "read_wds_csv",

@@ -10,13 +10,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_parquet(spark: SparkSession, path: str, schema: StructType | str | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -11,11 +11,14 @@ state grows forever); `session_window` keeps session state per key and
 evicts on watermark; sink is `memory` only in tests — production uses
 kafka/parquet sinks with checkpointing.
 
-The foreachBatch sinks (latest-wins MERGE, additive running aggregate,
-SCD2 history) differ only in their fold; all of them commit through one
-versioned-commit protocol, `_commit_version`: immutable `v{batch_id}`
-version dirs, `_SUCCESS` as the commit record, a strictly-older base,
-replayed batches skipped, old versions garbage-collected.
+The foreachBatch sinks (`merge_batch` latest-wins MERGE,
+`incremental_agg_batch` additive running aggregate, `scd2_batch` SCD2
+history) differ only in their fold. All of them run under one runner,
+`run_foreach_batch`, and commit through one versioned-commit protocol,
+`_commit_version`: immutable `v{batch_id}` version dirs, `_SUCCESS` as
+the commit record, a strictly-older base, replayed batches skipped, old
+versions garbage-collected. One reader, `read_merge_target(..., version)`,
+reads the latest committed version or any retained one (time travel).
 """
 
 from __future__ import annotations
@@ -62,9 +65,18 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes", watermark: str = 
     )
 
 
-def _purchases_after_views(stream: DataFrame, watermark: str, how: str) -> DataFrame:
-    """Purchases joined (`how`) to same-user views in the preceding hour,
-    both sides watermarked."""
+def purchases_after_views(stream: DataFrame, how: str = "inner", watermark: str = "2 hours") -> DataFrame:
+    """Stream-stream interval join: purchases joined (`how`) to same-user
+    views in the preceding hour. Watermarks on BOTH sides + the
+    time-range predicate bound the join state (without them,
+    stream-stream joins buffer forever).
+
+    `how="leftOuter"` emits every purchase, with NULL view columns when
+    no view matched. An outer row can only be emitted once the
+    watermark proves no matching view can still arrive, so unmatched
+    rows arrive LATE (watermark-delayed) while matched rows do not:
+    the semantic difference a pipeline must plan for vs the inner
+    join."""
     views = (
         stream.filter(F.col("event_type") == "view")
         .select(
@@ -90,28 +102,6 @@ def _purchases_after_views(stream: DataFrame, watermark: str, how: str) -> DataF
         & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
         how,
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-
-
-def purchases_after_views_join(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream interval join: purchases matched to same-user views
-    in the preceding hour. Watermarks on BOTH sides + the time-range
-    predicate bound the join state (without them, stream-stream joins
-    buffer forever)."""
-    return _purchases_after_views(stream, watermark, "inner")
-
-
-def purchases_after_views_outer_join(
-    stream: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every purchase emits,
-    matched to preceding-hour views where they exist, with NULL view
-    columns otherwise. Outer results can only be emitted once the
-    watermark proves no matching view can still arrive — so unmatched
-    rows appear LATE (watermark-delayed), which is the semantic
-    difference a pipeline must plan for vs the inner join. Both
-    watermarks plus the time-range predicate bound the state exactly
-    as in the inner variant."""
-    return _purchases_after_views(stream, watermark, "leftOuter")
 
 
 def run_available_now(
@@ -172,13 +162,18 @@ def _committed_versions(spark, target_path: str) -> list[str]:
     return sorted(out)
 
 
-def read_merge_target(spark, target_path: str) -> DataFrame:
-    """Read the latest committed version of a `run_foreach_batch_upsert`
-    target. Raises if no version has been committed yet."""
+def read_merge_target(spark, target_path: str, version: str | None = None) -> DataFrame:
+    """Read committed version `version` (e.g. "v0000000003") of a
+    versioned foreachBatch target, or the latest committed version when
+    `version` is None. TIME TRAVEL: every version stays readable until
+    `_gc_versions` prunes it. Raises FileNotFoundError when that version
+    is not committed, or when nothing is committed yet."""
     versions = _committed_versions(spark, target_path)
-    if not versions:
-        raise FileNotFoundError(f"no committed version under {target_path}")
-    return spark.read.parquet(f"{target_path}/{versions[-1]}")
+    if version is None and versions:
+        version = versions[-1]
+    if version not in versions:
+        raise FileNotFoundError(f"version {version or 'latest'!r} not committed under {target_path}")
+    return spark.read.parquet(f"{target_path}/{version}")
 
 
 def _commit_version(
@@ -219,12 +214,29 @@ def _commit_version(
     return True
 
 
-def _drain_foreach_batch(
+def run_foreach_batch(
     df: DataFrame, fn: Callable[[DataFrame, int], object], checkpoint_dir: str
 ) -> None:
     """Run `fn(batch_df, batch_id)` on every micro-batch of `df` until
     the source is drained (availableNow), blocking. The checkpoint's
-    offset log is what replays an interrupted batch under the same id."""
+    offset log is what replays an interrupted batch under the same id.
+
+    foreachBatch hands each micro-batch to arbitrary BATCH code, which
+    is how Structured Streaming reaches sinks the streaming API can't
+    express (MERGE, multi-table fan-out, JDBC upserts). The versioned
+    sinks are per-batch functions bound with `functools.partial`:
+
+        run_foreach_batch(stream, partial(merge_batch, target_path=t,
+                          keys=["user_id"], order_col="event_id"), ckpt)
+
+    likewise `incremental_agg_batch` (running aggregate) and
+    `scd2_batch` (SCD2 history). Each batch commits a new immutable
+    version through `_commit_version` and `read_merge_target` resolves
+    the latest committed one, so a crash loses at most the in-flight
+    version and a replayed committed batch is skipped. A real lakehouse
+    table (Delta/Iceberg `MERGE INTO`) would replace this whole
+    mechanism with one transaction; the upsert semantics are identical
+    (operators/incremental.upsert)."""
     q = (
         df.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint_dir)
@@ -269,37 +281,6 @@ def _gc_versions(spark, target_path: str, keep: int = 2) -> None:
     for old in _committed_versions(spark, target_path)[:-keep]:
         hpath = jvm.org.apache.hadoop.fs.Path(f"{target_path}/{old}")
         hpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath, True)
-
-
-def run_foreach_batch_upsert(
-    df: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str,
-    checkpoint_dir: str,
-    retain_versions: int = 2,
-) -> None:
-    """foreachBatch sink: latest-wins MERGE of every micro-batch into a
-    parquet target (the Delta-less `MERGE INTO` pattern). foreachBatch
-    hands each micro-batch to arbitrary BATCH code, which is how
-    Structured Streaming reaches sinks/logic the streaming API can't
-    express (multi-table writes, JDBC upserts, MERGE).
-
-    Durability: every batch commits a new immutable version through
-    `_commit_version` and readers (`read_merge_target`) resolve the
-    latest committed one, so a crash loses at most the in-flight version
-    and a replayed committed batch is skipped. A real lakehouse table
-    (Delta/Iceberg `MERGE INTO`) replaces this whole mechanism with one
-    transaction; the upsert semantics are identical
-    (operators/incremental.upsert)."""
-    _drain_foreach_batch(
-        df,
-        lambda batch_df, batch_id: merge_batch(
-            batch_df, batch_id, target_path,
-            keys=keys, order_col=order_col, retain_versions=retain_versions,
-        ),
-        checkpoint_dir,
-    )
 
 
 def enriched_stream(
@@ -362,26 +343,6 @@ def incremental_agg_batch(
     return _commit_version(batch_df, batch_id, target_path, fold)
 
 
-def run_foreach_batch_incremental_agg(
-    df: DataFrame,
-    target_path: str,
-    checkpoint_dir: str,
-    group_col: str = "event_type",
-    value_col: str = "value",
-) -> None:
-    """foreachBatch sink maintaining a running (count, sum) aggregate
-    per group across micro-batches — the incremental-materialized-view
-    pattern for metrics a 100 TB stream can't re-aggregate from scratch
-    per batch."""
-    _drain_foreach_batch(
-        df,
-        lambda batch_df, batch_id: incremental_agg_batch(
-            batch_df, batch_id, target_path, group_col=group_col, value_col=value_col
-        ),
-        checkpoint_dir,
-    )
-
-
 def chained_windowed_max(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Two stacked stateful window aggregations in ONE streaming query
     (Spark 3.4+ chained time-window aggregation): 15-minute tumbling
@@ -410,14 +371,6 @@ def chained_windowed_max(stream: DataFrame, watermark: str = "2 hours") -> DataF
             "n_total",
         )
     )
-
-
-def read_merge_target_at(spark, target_path: str, version: str) -> DataFrame:
-    """TIME TRAVEL: read a specific committed version of a versioned
-    MERGE target (versions survive until _gc_versions prunes them)."""
-    if version not in _committed_versions(spark, target_path):
-        raise FileNotFoundError(f"version {version!r} not committed under {target_path}")
-    return spark.read.parquet(f"{target_path}/{version}")
 
 
 def table_history(spark, target_path: str) -> DataFrame:
@@ -490,26 +443,3 @@ def scd2_batch(
         return base.join(touched, key_col, "left_anti").unionByName(rebuilt)
 
     return _commit_version(batch_df, batch_id, target_path, fold)
-
-
-def run_foreach_batch_scd2(
-    df: DataFrame,
-    target_path: str,
-    checkpoint_dir: str,
-    key_col: str = "user_id",
-    effective_col: str = "ref_date",
-    value_col: str = "value",
-    order_col: str | None = None,
-) -> None:
-    """foreachBatch sink maintaining an SCD2 dimension history across
-    micro-batches — streaming upstream, type-2 history downstream,
-    with per-key incremental valid_to maintenance."""
-    _drain_foreach_batch(
-        df,
-        lambda batch_df, batch_id: scd2_batch(
-            batch_df, batch_id, target_path,
-            key_col=key_col, effective_col=effective_col, value_col=value_col,
-            order_col=order_col,
-        ),
-        checkpoint_dir,
-    )

@@ -32,7 +32,7 @@ def test_partitioned_parquet_roundtrip(spark, sf_small):
     )
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "orders_part")
-        write_partitioned_parquet(orders, path, ["o_year"], target_partitions=4)
+        write_partitioned_parquet(orders, path, ["o_year"])
         # partition dirs exist → partition pruning is possible on read
         years = {e.split("=")[1] for e in os.listdir(path) if e.startswith("o_year=")}
         assert len(years) >= 3

@@ -3,6 +3,8 @@ batch twin on the same events data."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +15,9 @@ from statcan_etl_pipeline_spark.streaming.jobs import (
     events_stream,
     incremental_agg_batch,
     merge_batch,
+    read_merge_target,
     run_available_now,
+    run_foreach_batch,
     scd2_batch,
     session_counts,
     windowed_counts,
@@ -69,11 +73,11 @@ def test_session_window_matches_batch_sessionize(spark, sf_small, tmp_path):
 
 
 def test_stream_stream_interval_join_matches_batch(spark, sf_small, tmp_path):
-    from statcan_etl_pipeline_spark.streaming.jobs import purchases_after_views_join
+    from statcan_etl_pipeline_spark.streaming.jobs import purchases_after_views
 
     stream = _stream(spark, sf_small, tmp_path)
     q = (
-        purchases_after_views_join(stream)
+        purchases_after_views(stream)
         .writeStream.format("memory")
         .queryName("ss_join")
         .outputMode("append")
@@ -126,17 +130,13 @@ def test_dedup_within_watermark_bounds_state(spark, sf_small, tmp_path):
 def test_foreach_batch_upsert_latest_wins(spark, sf_small, tmp_path):
     """foreachBatch MERGE: after draining the stream, the target holds
     exactly one row per user with that user's latest event."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        read_merge_target,
-        run_foreach_batch_upsert,
-    )
-
     target = str(tmp_path / "t")
     raw = _stream(spark, sf_small, tmp_path)
     slim = raw.select("user_id", "event_id", "ts", "event_type")
-    run_foreach_batch_upsert(
-        slim, target, keys=["user_id"], order_col="event_id",
-        checkpoint_dir=str(tmp_path / "ckpt"),
+    run_foreach_batch(
+        slim,
+        partial(merge_batch, target_path=target, keys=["user_id"], order_col="event_id"),
+        str(tmp_path / "ckpt"),
     )
     got = read_merge_target(spark, target)
     ev = load_table(spark, sf_small, "events")
@@ -159,19 +159,15 @@ def test_foreach_batch_upsert_replay_idempotent(spark, sf_small, tmp_path):
     leave the table contents identical — the latest-wins MERGE is
     value-idempotent, so exactly-once EFFECT holds even though the
     batch runs twice."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        read_merge_target,
-        run_foreach_batch_upsert,
-    )
-
     target = str(tmp_path / "t")
     raw = _stream(spark, sf_small, tmp_path)
     slim = raw.select("user_id", "event_id", "ts", "event_type")
 
     def run_once(ckpt):
-        run_foreach_batch_upsert(
-            slim, target, keys=["user_id"], order_col="event_id",
-            checkpoint_dir=str(tmp_path / ckpt),
+        run_foreach_batch(
+            slim,
+            partial(merge_batch, target_path=target, keys=["user_id"], order_col="event_id"),
+            str(tmp_path / ckpt),
         )
         return sorted(
             tuple(r) for r in read_merge_target(spark, target).collect()
@@ -231,11 +227,6 @@ def test_merge_batch_replay_of_committed_batch_is_skipped(spark, tmp_path):
     version dir already committed must NOT read-and-overwrite that
     version in place — merge_batch skips it entirely, and a later
     uncommitted batch merges from the strictly-older base."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        merge_batch,
-        read_merge_target,
-    )
-
     target = str(tmp_path / "t")
     b0 = spark.createDataFrame(
         [(1, 10, "a"), (2, 11, "b")], "user_id int, event_id int, v string"
@@ -306,8 +297,6 @@ def test_uncommitted_replay_uses_strictly_older_base(spark, tmp_path, sink):
     they share one commit protocol."""
     import os
 
-    from statcan_etl_pipeline_spark.streaming.jobs import read_merge_target
-
     call, schema, rows0, rows1, cols, want = _REPLAY_CASES[sink]
     target = str(tmp_path / "t")
     assert call(spark.createDataFrame(rows0, schema), 0, target)
@@ -360,10 +349,6 @@ def test_incremental_agg_multibatch_matches_batch(spark, sf_small, tmp_path):
     4-file stream (maxFilesPerTrigger=1 → 4 micro-batches) equals the
     from-scratch batch aggregate, bit-exactly."""
     from statcan_etl_pipeline_spark.functions.portable import cents
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        read_merge_target,
-        run_foreach_batch_incremental_agg,
-    )
 
     ev = load_table(spark, sf_small, "events").select("event_type", "value")
     src = str(tmp_path / "src")
@@ -374,8 +359,8 @@ def test_incremental_agg_multibatch_matches_batch(spark, sf_small, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "agg")
-    run_foreach_batch_incremental_agg(
-        stream, target, checkpoint_dir=str(tmp_path / "ck")
+    run_foreach_batch(
+        stream, partial(incremental_agg_batch, target_path=target), str(tmp_path / "ck")
     )
     got = {
         tuple(r)
@@ -397,11 +382,6 @@ def test_incremental_agg_multibatch_matches_batch(spark, sf_small, tmp_path):
 
 def test_incremental_agg_replay_is_noop(spark, sf_small, tmp_path):
     """Re-folding an already-committed batch id must not double-count."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        incremental_agg_batch,
-        read_merge_target,
-    )
-
     ev = load_table(spark, sf_small, "events").select("event_type", "value")
     target = str(tmp_path / "agg")
     assert incremental_agg_batch(ev, 0, target) is True
@@ -455,14 +435,14 @@ def test_chained_window_aggregation_matches_batch(spark, sf_small, tmp_path):
 def test_time_travel_and_table_history(spark, tmp_path):
     """Versioned MERGE targets support table-format-style time travel:
     every committed version stays readable until GC, and table_history
-    lists (version, batch_id, row count) in commit order."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        merge_batch,
-        read_merge_target_at,
-        table_history,
-    )
+    lists (version, batch_id, row count) in commit order. Reading a
+    version that never committed, or any target before its first
+    commit, raises FileNotFoundError."""
+    from statcan_etl_pipeline_spark.streaming.jobs import table_history
 
     target = str(tmp_path / "tt")
+    with pytest.raises(FileNotFoundError):
+        read_merge_target(spark, target)  # nothing committed yet
     b0 = spark.createDataFrame(
         [(1, 10, "a"), (2, 11, "b")], "user_id int, event_id int, v string"
     )
@@ -472,18 +452,16 @@ def test_time_travel_and_table_history(spark, tmp_path):
     merge_batch(b0, 0, target, keys=["user_id"], order_col="event_id")
     merge_batch(b1, 1, target, keys=["user_id"], order_col="event_id")
 
-    v0 = read_merge_target_at(spark, target, "v0000000000")
+    v0 = read_merge_target(spark, target, "v0000000000")
     assert sorted((r["user_id"], r["v"]) for r in v0.collect()) == [(1, "a"), (2, "b")]
-    v1 = read_merge_target_at(spark, target, "v0000000001")
+    v1 = read_merge_target(spark, target, "v0000000001")
     assert sorted((r["user_id"], r["v"]) for r in v1.collect()) == [
         (1, "a2"), (2, "b"), (3, "c"),
     ]
     hist = sorted(tuple(r) for r in table_history(spark, target).collect())
     assert hist == [("v0000000000", 0, 2), ("v0000000001", 1, 3)]
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_merge_target_at(spark, target, "v0000000009")
+    with pytest.raises(FileNotFoundError):
+        read_merge_target(spark, target, "v0000000009")
 
 
 def test_foreach_batch_fanout_two_sinks_consistent(spark, sf_small, tmp_path):
@@ -509,13 +487,7 @@ def test_foreach_batch_fanout_two_sinks_consistent(spark, sf_small, tmp_path):
         finally:
             batch_df.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(fanout)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
+    run_foreach_batch(stream, fanout, str(tmp_path / "ckpt"))
 
     raw = spark.read.parquet(raw_dir)
     agg = spark.read.parquet(agg_dir)
@@ -545,11 +517,6 @@ def test_merge_batch_schema_evolution_adds_column(spark, tmp_path):
     versions: pre-existing rows carry NULL for the new column, the old
     version dir stays readable with its original schema, and a
     follow-up batch in the evolved schema merges normally."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        merge_batch,
-        read_merge_target,
-    )
-
     target = str(tmp_path / "t")
     b0 = spark.createDataFrame(
         [(1, 10, "a"), (2, 11, "b")], "user_id int, event_id int, v string"
@@ -612,13 +579,11 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, sf_small, tmp_path
     view must surface with NULL view_id once the watermark passes, and
     matched rows must agree with the batch join. availableNow drains
     the finite source, so the final watermark releases all outer rows."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        purchases_after_views_outer_join,
-    )
+    from statcan_etl_pipeline_spark.streaming.jobs import purchases_after_views
 
     stream = _stream(spark, sf_small, tmp_path)
     q = (
-        purchases_after_views_outer_join(stream)
+        purchases_after_views(stream, "leftOuter")
         .writeStream.format("memory")
         .queryName("ss_outer_join")
         .outputMode("append")
@@ -689,11 +654,6 @@ def test_streaming_scd2_maintenance_matches_batch(spark, sf_small, tmp_path):
         scd2_history,
         upsert,
     )
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        read_merge_target,
-        run_foreach_batch_scd2,
-    )
-
     ev = load_table(spark, sf_small, "events").select(
         "user_id",
         F.date_format("ts", "yyyy-MM-dd").alias("ref_date"),
@@ -708,9 +668,8 @@ def test_streaming_scd2_maintenance_matches_batch(spark, sf_small, tmp_path):
         .parquet(src)
     )
     target = str(tmp_path / "scd2")
-    run_foreach_batch_scd2(
-        stream, target, checkpoint_dir=str(tmp_path / "ck"),
-        order_col="event_id",
+    run_foreach_batch(
+        stream, partial(scd2_batch, target_path=target, order_col="event_id"), str(tmp_path / "ck")
     )
     got = {
         tuple(r)
@@ -740,11 +699,6 @@ def test_scd2_batch_replay_and_out_of_order_revision(spark, tmp_path):
     carrying an OLDER revision (lower order_col) for an existing
     (key, effective) must NOT overwrite the newer value — cross-batch
     conflicts resolve by the data's order column, not arrival order."""
-    from statcan_etl_pipeline_spark.streaming.jobs import (
-        read_merge_target,
-        scd2_batch,
-    )
-
     target = str(tmp_path / "t")
     sch = "user_id int, ref_date string, value double, event_id int"
     b0 = spark.createDataFrame(
