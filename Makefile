@@ -10,7 +10,8 @@
 # since scripts/query_hashes.json must sit in the driver's first 50.
 # `lines` runs scripts/code_lines.py over the package outside queries/:
 # code lines per file and in total, without blanks, comments or
-# docstrings (the size figure a simplification is judged by).
+# docstrings (the size figure a simplification is judged by), then the
+# same total over queries/.
 PYTEST = export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
@@ -33,3 +34,4 @@ window:
 
 lines:
 	python scripts/code_lines.py $$(find statcan_etl_pipeline_spark -name '*.py' -not -path '*/queries/*' | sort)
+	@python scripts/code_lines.py statcan_etl_pipeline_spark/queries | awk 'END { print $$1, "total in queries/" }'

@@ -28,40 +28,56 @@ def entry(spark: SparkSession) -> DataFrame:
 # not-yet-hash-verified and newly added queries first; queries already
 # hash-verified in a prior round's CORRECTNESS_r*.json come after.
 _CHECK_FIRST = [
-    # --- ROUND 15 WINDOW (VERDICT r14 item 3). Positions 0-3: this
-    # round's changed queries — the dedup-below-verify rewrite in
-    # _embedding_lsh_pairs (both consumers; results bit-identical,
-    # parity-checked exact at sf0.1, see OPTIMIZATION_r15.md item 4),
-    # the k-core broadcast-guard edit (join-strategy only, results
-    # bit-identical), and part_copurchase_triangles (hash moved vs the
-    # r14 snapshot; its current code was already driver-verified green
-    # in CORRECTNESS_r14 — kept in-window for the snapshot refresh). ---
+    # --- Positions 0-11: the one pair emitter
+    # (operators/dedup.group_pairs). The dedup module's char-shingle
+    # document and capped-LSH-pair helpers, the co-purchase edge and
+    # hub-capped adjacency helpers and the label-propagation pair build
+    # moved these hashes; dedup_ngram_jaccard (jaccard_pairs) is the
+    # operator's direct consumer, and ann_planted_recall_contract's
+    # helper docstring names the emitter. Plans unchanged except
+    # copurchase_part_similarity, which loses one renaming Project. ---
+    "dedup_ngram_jaccard",
+    "dedup_lsh_bucket_census",
+    "dedup_connected_groups",
+    "dedup_cluster_size_census",
+    "dedup_token_savings_by_source",
+    "dedup_simhash",
+    "dedup_incremental_delta",
+    "copurchase_band_census",
+    "copurchase_minhash_calibration",
+    "copurchase_degree_distribution",
+    "part_label_propagation_communities",
+    "ann_planted_recall_contract",
+    # --- Positions 12-13: the hand-rolled latest-revision windows now
+    # call operators.incremental.latest_revision (same executed plan
+    # node sequence). ---
+    "statcan_latest_revision",
+    "scd2_user_daily_value",
+    # --- Positions 14-22: changed since the snapshot before this
+    # change — the r15 dedup-below-verify rewrites
+    # (_embedding_lsh_pairs, copurchase_part_similarity), the k-core
+    # broadcast guard, part_copurchase_triangles, the LSH pair
+    # consumers dedup_minhash_lsh and minhash_jaccard_calibration, and
+    # the two queries that gained a same-module helper in the module
+    # regroup. ---
     "dedup_embedding_lsh",
     "dedup_embedding_groups",
     "part_kcore_decomposition",
     "part_copurchase_triangles",
-    # --- Positions 4-6: the r15 lsh_pairs_from_index dedup=False
-    # change — copurchase_part_similarity's hash moved (same-module
-    # helper); dedup_minhash_lsh + minhash_jaccard_calibration are the
-    # operator's most-direct consumers (default path byte-equivalent,
-    # rotated in per the SURVEY §5 changed-code-gets-driver-evidence
-    # convention; the cross-module v2 hash gap means their hashes did
-    # not move). Three r9-block members defer to the tail for r16. ---
     "copurchase_part_similarity",
     "dedup_minhash_lsh",
     "minhash_jaccard_calibration",
-    # --- Positions 7-12: the six r8-stale deferrals (VERDICT r14
-    # item 4c / r15 item 3) — the freshness floor moves to r9. ---
+    "kruskal_wallis_order_value",
+    "spearman_price_acctbal",
+    # --- Positions 23-28: the six r8-stale deferrals. ---
     "stratified_sample_exact",
     "survey_ht_total_audit",
     "text_stopword_profile",
     "user_weekly_survival",
     "approx_distinct_parts_by_flag",
     "approx_quantiles_order_value",
-    # --- Positions 13-49: the r9 block, next-stalest first (37 of
-    # 46; the remaining nine lead the tail below for the r16 window —
-    # three were evicted when the lsh_pairs_from_index trio above
-    # rotated in). ---
+    # --- Positions 29-49: the r9 block, next-stalest first (21 of
+    # 44; the rest lead the tail below). ---
     "asof_join_cogrouped",
     "bom_explosion_recursive",
     "business_day_ship_latency",
@@ -82,8 +98,10 @@ _CHECK_FIRST = [
     "events_bounce_rate_daily",
     "events_cuped_variance_reduction",
     "hll_mergeable_rollup",
-    "kruskal_wallis_order_value",
     "mwu_order_value_segments",
+    # --- everything below position 49 is driver-green from r9-r14;
+    # next-stalest first so future rotations read top-down: the
+    # remaining r9 names, then the members verified in r14. ---
     "nation_trade_balance",
     "orders_chain_ladder_completion",
     "orders_kaplan_meier_ship_latency",
@@ -95,34 +113,21 @@ _CHECK_FIRST = [
     "q5_local_supplier_volume",
     "q9_product_profit",
     "sessionize_events",
-    "spearman_price_acctbal",
     "statcan_allocation_largest_remainder",
     "statcan_gvf_cv_model",
     "statcan_random_rounding_base5",
     "survey_jackknife_variance",
     "survey_neyman_allocation",
     "survey_winsorized_total",
-    # --- everything below position 49 is driver-green from r9-r14;
-    # next-stalest first so future rotations read top-down: the six
-    # remaining r9 names, then the 48 members verified in r14. ---
     "text_fingerprint",
     "text_quality_score",
     "text_rake_keywords",
     "text_stats",
     "tukey_hsd_pairwise",
     "window_top3_parts_per_supplier",
-    "copurchase_band_census",
-    "copurchase_minhash_calibration",
-    "ann_planted_recall_contract",
     "graph_pagerank",
-    "part_label_propagation_communities",
-    "copurchase_degree_distribution",
     "agg_rollup_sales",
     "tfidf_top_terms",
-    "dedup_ngram_jaccard",
-    "dedup_connected_groups",
-    "dedup_cluster_size_census",
-    "dedup_token_savings_by_source",
     "doc_novelty_by_order",
     "doc_script_mix",
     "doc_token_arrow_stats",

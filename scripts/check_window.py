@@ -13,7 +13,10 @@ helper-only module WARNING was suppressed because SIBLING query bodies
 in the same file changed — modified-but-unverified code shipped. v2
 hashes therefore fold in the source of every module-level helper the
 query (transitively) references, plus referenced module-level constants,
-so helper rewrites move every consumer's hash.
+so helper rewrites move every consumer's hash. v3 also folds in
+same-module classes and dict/list/set constants (a declarative pipeline
+spec, a stopword set), so the closure alone decides which queries moved
+and no per-module file hash is kept.
 
 Hashes do not depend on where the repo is checked out: the planted
 queries' oracles embed an absolute fixture path (queries/planted.py,
@@ -24,8 +27,8 @@ pass.
 
 Usage:
     python scripts/check_window.py --snapshot   # at end of round: record
-        per-query hashes (v2: body + referenced helpers/constants +
-        oracle) into scripts/query_hashes.json
+        per-query hashes (v3: body + referenced helpers/classes/
+        constants + oracle) into scripts/query_hashes.json
     python scripts/check_window.py              # before snapshot/commit:
         exit 1 if any changed/new query is outside the window
 """
@@ -46,16 +49,35 @@ sys.path.insert(0, REPO)
 
 MANIFEST = os.path.join(os.path.dirname(os.path.abspath(__file__)), "query_hashes.json")
 
-HASH_VERSION = 2
+HASH_VERSION = 3
 REPO_TOKEN = "<repo>"
 
 
-def _referenced_closure(fn) -> str:
+def _canonical(obj) -> str:
+    """repr of a constant with every set sorted (so the text does not
+    depend on PYTHONHASHSEED) and callables named, not addressed."""
+    if isinstance(obj, (set, frozenset)):
+        return "{" + ", ".join(sorted(_canonical(x) for x in obj)) + "}"
+    if isinstance(obj, dict):
+        return "{" + ", ".join(
+            f"{_canonical(k)}: {_canonical(v)}" for k, v in obj.items()
+        ) + "}"
+    if isinstance(obj, (list, tuple)):
+        return type(obj).__name__ + "(" + ", ".join(_canonical(x) for x in obj) + ")"
+    if isinstance(obj, (str, int, float, bool, type(None))):
+        return repr(obj)
+    return f"<{type(obj).__qualname__} {getattr(obj, '__qualname__', '')}>"
+
+
+def _referenced_closure(fn, version: int = HASH_VERSION) -> str:
     """Source of every module-level helper `fn` transitively references
     (same module only) plus the repr of referenced module-level
     constants (any module — catches imported tuning constants like
     N_HASHES). This is what makes a helper rewrite move the hash of
-    every query that calls it, even when the query body is untouched."""
+    every query that calls it, even when the query body is untouched.
+    v3 adds same-module classes (source, followed like helpers) and
+    dict/list/set constants (`_canonical`); v2 kept scalars, tuples and
+    frozensets only."""
     pieces: list[str] = []
     seen: set[tuple[str, str]] = set()
 
@@ -66,14 +88,17 @@ def _referenced_closure(fn) -> str:
         except (OSError, TypeError, SyntaxError):
             return
         names = sorted({n.id for n in ast.walk(tree) if isinstance(n, ast.Name)})
-        g = getattr(f, "__globals__", {})
+        g = getattr(f, "__globals__", None) or vars(sys.modules[f.__module__])
         for nm in names:
             key = (getattr(f, "__module__", ""), nm)
             if key in seen or nm not in g:
                 continue
             seen.add(key)
             obj = g[nm]
-            if inspect.isfunction(obj) and obj.__module__ == fn.__module__:
+            same_module = getattr(obj, "__module__", None) == fn.__module__
+            if same_module and (
+                inspect.isfunction(obj) or (version >= 3 and inspect.isclass(obj))
+            ):
                 try:
                     pieces.append(
                         f"--helper {nm}--\n" + inspect.getsource(obj)
@@ -81,25 +106,23 @@ def _referenced_closure(fn) -> str:
                 except (OSError, TypeError):
                     pieces.append(f"--helper {nm}=<unsourceable>--")
                 visit(obj)
+            elif version >= 3 and isinstance(
+                obj, (str, int, float, bool, tuple, frozenset, set, list, dict)
+            ):
+                pieces.append(f"--const {nm}={_canonical(obj)}--")
             elif isinstance(obj, (str, int, float, bool, tuple, frozenset)):
                 pieces.append(f"--const {nm}={obj!r}--")
     visit(fn)
     return "\n".join(pieces)
 
 
-def _current_hashes(
-    version: int = HASH_VERSION,
-) -> tuple[dict[str, str], dict[str, str], dict[str, list[str]]]:
-    """(per-query hash, per-module file hash, module -> query names).
-
-    v1 hashes cover the registered function's own source plus its
-    oracle. v2 additionally covers the transitive same-module helper
-    closure and referenced constants (see _referenced_closure). The
-    module file hash remains the belt-and-braces residue detector for
-    anything the closure misses (e.g. decorator-time oracle builders)."""
+def _current_hashes(version: int = HASH_VERSION) -> dict[str, str]:
+    """Per-query hash. v1 covers the registered function's own source
+    plus its oracle; v2 and v3 add the transitive closure of
+    `_referenced_closure` at that version."""
     from statcan_etl_pipeline_spark.registry import ORACLES, QUERIES
 
-    out, mod_files, mod_queries = {}, {}, {}
+    out = {}
     for name, fn in QUERIES.items():
         try:
             src = inspect.getsource(fn)
@@ -107,20 +130,10 @@ def _current_hashes(
             src = repr(fn)
         blob = src + "\n--oracle--\n" + ORACLES.get(name, "")
         if version >= 2:
-            blob += "\n--closure--\n" + _referenced_closure(fn)
+            blob += "\n--closure--\n" + _referenced_closure(fn, version)
         blob = blob.replace(REPO, REPO_TOKEN)
         out[name] = hashlib.md5(blob.encode()).hexdigest()
-        mod = getattr(fn, "__module__", None)
-        if mod:
-            mod_queries.setdefault(mod, []).append(name)
-            if mod not in mod_files:
-                try:
-                    path = inspect.getfile(fn)
-                    with open(path, "rb") as f:
-                        mod_files[mod] = hashlib.md5(f.read()).hexdigest()
-                except (OSError, TypeError):
-                    pass
-    return out, mod_files, mod_queries
+    return out
 
 
 def _window() -> list[str]:
@@ -141,10 +154,10 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.snapshot:
-        cur, mod_files, _ = _current_hashes()
+        cur = _current_hashes()
         with open(MANIFEST, "w") as f:
             json.dump(
-                {"version": HASH_VERSION, "queries": cur, "modules": mod_files},
+                {"version": HASH_VERSION, "queries": cur},
                 f, indent=0, sort_keys=True,
             )
         print(f"snapshot: {len(cur)} v{HASH_VERSION} query hashes -> {MANIFEST}")
@@ -156,16 +169,15 @@ def main() -> int:
 
     with open(MANIFEST) as f:
         snap = json.load(f)
-    base = snap.get("queries", snap)  # tolerate the pre-module format
-    base_mods = snap.get("modules", {})
-    snap_version = snap.get("version", 1)
+    base = snap["queries"]
+    snap_version = snap["version"]
     if snap_version != HASH_VERSION:
         print(
             f"note: manifest is v{snap_version}; comparing with the "
             f"v{snap_version} algorithm (next --snapshot upgrades to "
             f"v{HASH_VERSION})"
         )
-    cur, mod_files, mod_queries = _current_hashes(version=snap_version)
+    cur = _current_hashes(version=snap_version)
     changed = sorted(
         name for name, h in cur.items() if base.get(name) != h
     )
@@ -176,25 +188,6 @@ def main() -> int:
     for name in changed:
         mark = "OK (in window)" if name in win else "VIOLATION (outside window)"
         print(f"  {name}: {mark}")
-    changed_set = set(changed)
-    for mod, h in sorted(mod_files.items()):
-        if base_mods.get(mod, h) == h:
-            continue
-        # r10 fix: the module WARNING fires for every unchanged-body
-        # query left OUTSIDE the window whenever the file hash moved —
-        # no longer suppressed when sibling bodies changed in the same
-        # file (the exact hole _embedding_lsh_pairs shipped through).
-        unverified = sorted(
-            q for q in mod_queries[mod]
-            if q not in changed_set and q not in win
-        )
-        if unverified:
-            print(
-                f"WARNING: {mod} changed on disk but these queries' "
-                f"hashes did not move and they sit OUTSIDE the window: "
-                f"{unverified} — triage (shared-helper edit?) or rotate "
-                f"them in"
-            )
     for name in vanished:
         print(f"  {name}: VIOLATION (in the manifest but no longer registered)")
     if vanished:

@@ -30,9 +30,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from statcan_etl_pipeline_spark.registry import QUERIES  # noqa: E402,F401  (loads all query modules first — direct graph import would hit the registry's circular-load guard)
 from statcan_etl_pipeline_spark.queries.graph import (  # noqa: E402
     _banded_similarity,
-    _copurchase_edges,
+    _hub_capped_adjacency,
     _SIM_BUCKET_CAP,
-    _SIM_HUB_CAP,
     copurchase_wedge_similarity,
 )
 from statcan_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -50,25 +49,19 @@ def _candidates(spark, sf_dir, n_hashes):
     (r14: the slim KM-family _sim_banded_index, matching the
     registered query; the r13 sweep numbers in SCALING.md were taken
     with the md5-string family)."""
-    from statcan_etl_pipeline_spark.operators.dedup import lsh_pairs_from_index
+    from statcan_etl_pipeline_spark.operators.dedup import group_pairs
     from statcan_etl_pipeline_spark.queries.graph import _sim_banded_index
 
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    small = adj.join(deg.filter(F.col("d") <= _SIM_HUB_CAP).select("node"), "node")
+    _, small = _hub_capped_adjacency(spark, sf_dir)
     shingled = small.select(
         F.col("nbr").alias("doc_id"), F.col("node").cast("string").alias("sh")
     )
     banded = _sim_banded_index(shingled, n_hashes, 2)
-    return lsh_pairs_from_index(banded, _SIM_BUCKET_CAP).count()
+    return (
+        group_pairs(banded, ["band", "key"], "doc_id", ("doc_a", "doc_b"), _SIM_BUCKET_CAP)
+        .distinct()
+        .count()
+    )
 
 
 def main() -> None:

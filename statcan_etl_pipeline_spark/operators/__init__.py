@@ -4,9 +4,9 @@ from .components import connected_components
 from .dedup import (
     band_keys,
     exploded_shingles,
+    group_pairs,
     jaccard_pairs,
-    lsh_bucket_census,
-    lsh_candidate_pairs,
+    lsh_census_from_index,
     minhash_signature,
 )
 from .incremental import scd2_history, snapshot_diff, upsert
@@ -52,9 +52,9 @@ __all__ = [
     "fake_decode_features",
     "fake_frame_sample",
     "fake_resize",
+    "group_pairs",
     "jaccard_pairs",
-    "lsh_bucket_census",
-    "lsh_candidate_pairs",
+    "lsh_census_from_index",
     "minhash_signature",
     "salted_join",
     "scd2_history",

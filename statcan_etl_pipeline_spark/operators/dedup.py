@@ -3,15 +3,17 @@
 Scale design (100 TB of documents):
 - EXACT dedup is a hash-groupBy on a 16-byte fingerprint — one shuffle
   on the fingerprint, map-side partial agg. Never compares full texts.
-- N-GRAM JACCARD builds an inverted index shingle→doc and joins on
-  shingle, so only pairs sharing ≥1 shingle are generated — never the
-  O(n²) cross join. Word k-grams keep shingles rare (bounded fan-out).
+- N-GRAM JACCARD builds an inverted index shingle→doc and emits the
+  doc pairs of each shingle, so only pairs sharing ≥1 shingle are
+  generated — never the O(n²) cross join. Word k-grams keep shingles rare (bounded fan-out).
   For high-commonality shingle spaces (char n-grams), use MinHash+LSH.
 - MINHASH is computed with a PORTABLE hash: the lexicographic MIN of
   md5(seed || ':' || shingle) per seed. md5 is identical everywhere,
   so the oracle can reproduce signatures exactly. Banded LSH then
-  joins docs on (band_index, band_key) — candidate generation is one
-  shuffle on band keys; per-bucket fan-out is bounded by bucket size.
+  pairs docs within each (band_index, band_key) bucket — candidate
+  generation is one shuffle on band keys; per-bucket fan-out is
+  bounded by bucket size.
+- Both pair stages are `group_pairs`, the one C(n, 2) emit.
 
 All expressions are built-in (codegen'd); no Python UDFs.
 """
@@ -78,116 +80,60 @@ def band_keys(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-    max_bucket_size: int | None = None,
+def group_pairs(
+    df: DataFrame,
+    by: str | list[str],
+    member: str,
+    names: tuple[str, str],
+    max_size: int | None = None,
 ) -> DataFrame:
-    """Distinct (doc_a, doc_b) sharing at least one LSH band.
+    """(names[0], names[1]): every a < b pair of distinct `member`
+    values that share a `by` group — the C(n, 2) emit behind LSH
+    candidate pairs, shingle Jaccard and the co-purchase graph. One row
+    per (group, pair), NOT deduplicated: a pair shared by k groups is
+    emitted k times, so callers that need a pair set add `.distinct()`
+    and callers that count groups per pair aggregate directly.
 
-    BAND-BUCKET CAP (`max_bucket_size`, off by default): pair
-    generation emits C(n, 2) pairs per (band, key) bucket, so bucket
-    density — not row count — is what its cost tracks. On a corpus
-    whose true near-dup density is quadratic (measured at sf1 on the
-    fixed-vocabulary synthetic corpus: Σ C(n, 2) grew 92.7× for 10×
-    docs, with the 74 buckets above 64 docs carrying 79% of all 1.27M
-    candidate pairs), buckets above the cap are excluded from PAIR
-    GENERATION, bounding per-bucket fan-out at C(cap, 2). A giant
-    bucket means either a giant duplicate cluster (for which pairwise
-    enumeration is the wrong output shape — census it and treat it as
-    one cluster) or band-collision flooding; either way its pairs are
-    the quadratic term. The cap is ALSO a recall cap: a true near-dup
-    pair whose only colliding band landed in a hot bucket is lost, not
-    deferred. NO SILENT CAP: callers must surface the skipped mass via
-    `lsh_bucket_census` (registered as the dedup_lsh_bucket_census
-    query), which upper-bounds the dropped pairs per bucket size.
-    Exclusion is a filter on each bucket's sorted doc-array length in
-    `lsh_pairs_from_index`, so the banded index has exactly one
-    consumer."""
-    return lsh_pairs_from_index(
-        band_keys(signatures, n_hashes, band_rows), max_bucket_size
+    Each group's SORTED distinct member array (one groupBy shuffle)
+    emits exactly C(n, 2) rows via posexplode + suffix slice — no
+    self-join, and per-row memory is O(n).
+
+    GROUP-SIZE CAP (`max_size`): groups of more than `max_size`
+    distinct members emit nothing. Fan-out is then bounded at C(cap, 2) per
+    group, but the cap is also a RECALL cap: a pair whose only shared
+    group is over the cap is lost, not deferred. For banded LSH (groups
+    = (band, key) buckets) callers surface the skipped mass with
+    `lsh_census_from_index`; registered queries do so as
+    dedup_lsh_bucket_census and copurchase_band_census."""
+    a, b = names
+    grouped = df.groupBy(by).agg(
+        F.sort_array(F.array_distinct(F.collect_list(member))).alias("__ms")
     )
-
-
-def lsh_pairs_from_index(
-    banded: DataFrame, max_bucket_size: int | None = None,
-    dedup: bool = True,
-) -> DataFrame:
-    """The pair-generation stage of `lsh_candidate_pairs`, split out
-    (r14) so callers that build the (doc_id, band, key) index
-    themselves — e.g. the copurchase queries' slim agg-time banding in
-    queries/graph.py, which never materializes the n_hashes
-    minhash columns — reuse the identical capped pair emit instead of
-    duplicating it. See `lsh_candidate_pairs` for the cap rationale.
-
-    r14 (guide §2.3 — the _copurchase_edges precedent): each bucket's
-    SORTED doc array (one groupBy shuffle) emits exactly C(n, 2)
-    doc_a < doc_b rows via posexplode + suffix slice, replacing the
-    (band, key) self-join. The bucket cap becomes a filter on the
-    array length — the same bucket exclusion the old hot-bucket
-    broadcast anti-join computed, without the extra aggregate pass or
-    the localCheckpoint (the index now has exactly ONE consumer).
-    Per-row memory is O(bucket size), bounded by the cap when one is
-    given. Pair set bit-identical (parity-checked exact at sf0.1,
-    11,278 capped pairs); won all four interleaved A/B pairs.
-
-    `dedup=False` (r15, guide §2.4) skips the cross-band distinct and
-    returns the RAW emit — one row per (pair, colliding band). A caller
-    whose downstream per-pair computation is deterministic can
-    deduplicate AFTER its own verify instead, turning the emit into one
-    unbroken pipeline into the verify joins (no 16-byte-per-pair
-    shuffle, no HashAggregate barrier over the candidate stream). Only
-    correct when the caller DOES dedup before anything that counts
-    rows; the default keeps the distinct-pairs contract every existing
-    consumer relies on."""
-    per_bucket = banded.groupBy("band", "key").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
-    if max_bucket_size is not None:
-        per_bucket = per_bucket.filter(F.size("ds") <= max_bucket_size)
-    raw = (
-        per_bucket.select(F.posexplode("ds").alias("i", "doc_a"), F.col("ds"))
-        .select(
-            "doc_a",
-            F.explode(F.slice("ds", F.col("i") + F.lit(2), F.size("ds"))).alias(
-                "doc_b"
-            ),
-        )
-    )
-    return raw.distinct() if dedup else raw
-
-
-def lsh_bucket_census(
-    signatures: DataFrame,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Census of banded-LSH bucket sizes — the companion report that
-    makes `max_bucket_size` a DOCUMENTED cap rather than a silent one.
-
-    One row per distinct bucket size: how many (band, key) buckets have
-    that size, the candidate pairs they would generate (n_buckets ·
-    C(size, 2)), and — when a cap is given — whether pair generation
-    skips them (`capped`). Sum of candidate_pairs where capped=1 is an
-    UPPER BOUND on the distinct pairs `lsh_candidate_pairs` drops
-    (exact per band, pre-dedup): a pair skipped in a hot bucket in one
-    band can still survive via a cold bucket in another band, so reports
-    built on the census must not read it as exact recall loss.
-    O(distinct sizes) output rows; one shuffle on (band, key) plus one
-    on the tiny size column."""
-    return lsh_census_from_index(
-        band_keys(signatures, n_hashes, band_rows), max_bucket_size
+    if max_size is not None:
+        grouped = grouped.filter(F.size("__ms") <= max_size)
+    return grouped.select(F.posexplode("__ms").alias("__i", a), "__ms").select(
+        a,
+        F.explode(F.slice("__ms", F.col("__i") + F.lit(2), F.size("__ms"))).alias(b),
     )
 
 
 def lsh_census_from_index(
     banded: DataFrame, max_bucket_size: int | None = None
 ) -> DataFrame:
-    """The census stage of `lsh_bucket_census`, split out (r14) for
-    callers with a self-built banded index — same split rationale as
-    `lsh_pairs_from_index`. Body is exactly the pre-split aggregation."""
+    """Census of banded-LSH bucket sizes over a (doc_id, band, key)
+    index — the companion report that makes a `group_pairs` size cap a
+    DOCUMENTED cap rather than a silent one.
+
+    One row per distinct bucket size: how many (band, key) buckets have
+    that size, the candidate pairs they would generate (n_buckets ·
+    C(size, 2)), and — when a cap is given — whether pair generation
+    skips them (`capped`). Sum of candidate_pairs where capped=1 is an
+    UPPER BOUND on the distinct pairs the cap drops (exact per band,
+    pre-dedup): a pair skipped in a hot bucket in one band can still
+    survive via a cold bucket in another band, so reports built on the
+    census must not read it as exact recall loss. O(distinct sizes)
+    output rows; one shuffle on (band, key) plus one on the tiny size
+    column."""
     sizes = banded.groupBy("band", "key").agg(
         F.count(F.lit(1)).cast("long").alias("bucket_size")
     )
@@ -219,7 +165,7 @@ def jaccard_pairs(
     """(doc_a, doc_b, common, jaccard) for pairs sharing ≥1 shingle with
     Jaccard ≥ threshold, via the shingle inverted index.
 
-    HOT-SHINGLE CAP: the self-join emits C(df, 2) pairs per shingle, so
+    HOT-SHINGLE CAP: the index emits C(df, 2) pairs per shingle, so
     one stop-phrase shingle shared by 10⁶ docs would generate ~5·10¹¹
     pairs — a scale-killer no small-SF test ever sees. Shingles with
     document frequency > df_cap carry ~no Jaccard information (they are
@@ -232,28 +178,11 @@ def jaccard_pairs(
     The oracle SQL mirrors the cap exactly, so parity is unaffected
     (max df at sf0.1 is 25 — far under the cap)."""
     counts = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # r14 (guide §2.3 — the _copurchase_edges precedent): the inverted
-    # index is each shingle's SORTED doc array (one groupBy shuffle);
-    # posexplode + suffix slice emits exactly C(df, 2) doc_a < doc_b
-    # rows per shingle, replacing the hot-shingle df aggregate, the
-    # broadcast anti-join AND the sh self-join. The df cap becomes a
-    # filter on the array length — identical exclusion (df = array
-    # size: shingled is distinct per (doc, sh)). Per-row memory is
-    # O(df), bounded by df_cap. Pair set bit-identical (parity-checked
-    # exact at sf0.1, 590 scored pairs); won all four interleaved A/B
-    # pairs (avg-of-mins 1.93 → 1.37 s).
-    per_sh = shingled.groupBy("sh").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ds")
-    )
+    # the df cap is the group-size cap of the shingle→doc emit (df =
+    # group size: shingled is distinct per (doc, sh)); per-shingle
+    # fan-out is O(df), bounded by df_cap
     common = (
-        per_sh.filter(F.size("ds") <= df_cap)
-        .select(F.posexplode("ds").alias("i", "doc_a"), F.col("ds"))
-        .select(
-            "doc_a",
-            F.explode(F.slice("ds", F.col("i") + F.lit(2), F.size("ds"))).alias(
-                "doc_b"
-            ),
-        )
+        group_pairs(shingled, "sh", "doc_id", ("doc_a", "doc_b"), df_cap)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )

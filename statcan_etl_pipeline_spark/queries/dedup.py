@@ -27,10 +27,11 @@ from ..operators.dedup import (
     BAND_ROWS,
     DF_CAP,
     N_HASHES,
+    band_keys,
     exploded_shingles,
+    group_pairs,
     jaccard_pairs,
-    lsh_bucket_census,
-    lsh_candidate_pairs,
+    lsh_census_from_index,
     minhash_signature,
 )
 from ..operators.simhash import simhash_oracle_sql, simhash_signatures
@@ -45,6 +46,16 @@ COS_TAU = 0.4
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scatter before the md5/shingle work so it runs wide (5.7× at sf0.1)
     return scatter(spark, load_table(spark, sf_dir, "documents"))
+
+
+def _char_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Documents with normalized `norm` text and its char-5-gram
+    `shingles` — the input of every MinHash and SimHash query."""
+    return (
+        _docs(spark, sf_dir)
+        .withColumn("norm", norm_text("text"))
+        .withColumn("shingles", char_shingles("norm", 5))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +147,7 @@ def _mh_pairs_ctes(max_bucket_size: int | None = None) -> str:
     else:
         pair_src = "kept"
         cap_ctes = f"""), cold AS (
-  -- band-bucket cap mirrored from operators/dedup.py:lsh_candidate_pairs
+  -- band-bucket cap mirrored from _lsh_pairs
   SELECT band, key FROM bands GROUP BY band, key
   HAVING count(*) <= {max_bucket_size}
 ), kept AS (
@@ -164,9 +175,22 @@ def _mh_pairs_ctes(max_bucket_size: int | None = None) -> str:
 # sf0.01 (the oracle gate) and sf0.001 no bucket reaches the cap, so
 # small-SF results are unchanged; the oracle mirrors the cap exactly so
 # parity holds at every SF regardless. Skipped mass is NOT silent:
-# lsh_bucket_census reports it (pinned in tests/test_operators.py and
+# dedup_lsh_bucket_census reports it (pinned in tests/test_operators.py and
 # recorded per-SF in SCALING.md).
 LSH_BUCKET_CAP = 64
+
+
+def _lsh_pairs(sig: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) sharing a banded-LSH bucket of at most
+    LSH_BUCKET_CAP docs — the capped candidate set every MinHash query
+    consumes."""
+    return group_pairs(
+        band_keys(sig, N_HASHES, BAND_ROWS),
+        ["band", "key"],
+        "doc_id",
+        ("doc_a", "doc_b"),
+        LSH_BUCKET_CAP,
+    ).distinct()
 
 
 def _mh_sql() -> str:
@@ -190,16 +214,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the registered dedup_lsh_bucket_census query (same SF, same
     signatures); its capped=1 rows bound the loss. The oracle mirrors
     the cap exactly, so parity holds at every SF."""
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
+    docs = _char_docs(spark, sf_dir)
     # explode + partial-agg min: measured ~3x faster than a per-row
     # array_min(transform(...)) signature, whose lambdas skip codegen
-    shingled = exploded_shingles(docs)
-    sig = minhash_signature(shingled, N_HASHES)
-    return lsh_candidate_pairs(sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP)
+    return _lsh_pairs(minhash_signature(exploded_shingles(docs), N_HASHES))
 
 
 # ---------------------------------------------------------------------------
@@ -238,15 +256,11 @@ def dedup_lsh_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUND on the distinct pairs the cap drops (exact per band,
     pre-dedup — a pair skipped in a hot bucket can still survive via a
     cold bucket in another band). O(distinct sizes) output rows; the
-    bands shuffle is the same exchange the pair join uses."""
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
+    bands shuffle is the same exchange the pair emit uses."""
+    docs = _char_docs(spark, sf_dir)
     sig = minhash_signature(exploded_shingles(docs), N_HASHES)
-    return lsh_bucket_census(
-        sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP
+    return lsh_census_from_index(
+        band_keys(sig, N_HASHES, BAND_ROWS), LSH_BUCKET_CAP
     ).orderBy("bucket_size")
 
 
@@ -290,14 +304,8 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation-agnostic, so hashes are unchanged."""
     from ..operators.components import connected_components_star
 
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
-    shingled = exploded_shingles(docs)
-    sig = minhash_signature(shingled, N_HASHES)
-    pairs = lsh_candidate_pairs(sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP)
+    docs = _char_docs(spark, sf_dir)
+    pairs = _lsh_pairs(minhash_signature(exploded_shingles(docs), N_HASHES))
     comp = connected_components_star(docs.select("doc_id"), pairs)
     return comp.select(
         F.col("vertex").alias("doc_id"), F.col("component").alias("group_rep")
@@ -315,13 +323,8 @@ _SIMHASH_SHINGLE_CTE = f"""
 
 @query("dedup_simhash", oracle=simhash_oracle_sql(_SIMHASH_SHINGLE_CTE))
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
-    shingled = exploded_shingles(docs)
-    return simhash_signatures(shingled)
+    docs = _char_docs(spark, sf_dir)
+    return simhash_signatures(exploded_shingles(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -661,14 +664,8 @@ def dedup_cluster_size_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # components run large-star/small-star — see dedup_connected_groups.
     from ..operators.components import connected_components_star
 
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
-    shingled = exploded_shingles(docs)
-    sig = minhash_signature(shingled, N_HASHES)
-    pairs = lsh_candidate_pairs(sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP)
+    docs = _char_docs(spark, sf_dir)
+    pairs = _lsh_pairs(minhash_signature(exploded_shingles(docs), N_HASHES))
     comp = connected_components_star(docs.select("doc_id"), pairs)
     sizes = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("cluster_size")
@@ -741,14 +738,9 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11: calibration runs over the SAME capped candidate set the
     # production pair generator emits (oracle mirrored) — auditing
     # pairs the cap excludes would grade a set nothing downstream sees.
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
-    shingled = exploded_shingles(docs)
-    sig = minhash_signature(shingled, N_HASHES)
-    pairs = lsh_candidate_pairs(sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP)
+    docs = _char_docs(spark, sf_dir)
+    sig = minhash_signature(exploded_shingles(docs), N_HASHES)
+    pairs = _lsh_pairs(sig)
     n_match = sum(
         F.when(F.col(f"a.mh_{k}") == F.col(f"b.mh_{k}"), 1).otherwise(0)
         for k in range(N_HASHES)
@@ -858,14 +850,8 @@ def dedup_token_savings_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     # components run large-star/small-star — see dedup_connected_groups.
     from ..operators.components import connected_components_star
 
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
-    shingled = exploded_shingles(docs)
-    sig = minhash_signature(shingled, N_HASHES)
-    pairs = lsh_candidate_pairs(sig, N_HASHES, BAND_ROWS, LSH_BUCKET_CAP)
+    docs = _char_docs(spark, sf_dir)
+    pairs = _lsh_pairs(minhash_signature(exploded_shingles(docs), N_HASHES))
     comp = connected_components_star(docs.select("doc_id"), pairs)
     tok = load_table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -971,13 +957,7 @@ ORDER BY doc_delta
 
 @query("dedup_incremental_delta", oracle=_inc_sql())
 def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import band_keys
-
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("norm", norm_text("text"))
-        .withColumn("shingles", char_shingles("norm", 5))
-    )
+    docs = _char_docs(spark, sf_dir)
     sh = exploded_shingles(docs)
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     bands = band_keys(minhash_signature(sh, N_HASHES), N_HASHES, BAND_ROWS)

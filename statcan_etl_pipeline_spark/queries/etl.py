@@ -22,6 +22,7 @@ from ..functions.portable import (
     sql_money_sum as MS,
     sql_round as R,
 )
+from ..operators.incremental import latest_revision
 from ..operators.resolution import fastss_pairs
 from ..plans.pipeline import run_pipeline
 from ..registry import query
@@ -132,13 +133,11 @@ def scd2_user_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 validity ranges over each user's daily latest value."""
     from ..operators.incremental import scd2_history
 
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id", "ref_date").orderBy(F.desc("ts"), F.desc("event_id"))
-    latest = (
-        ev.withColumn("ref_date", F.date_format("ts", "yyyy-MM-dd"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "ref_date", "value")
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ref_date", F.date_format("ts", "yyyy-MM-dd")
+    )
+    latest = latest_revision(ev, ["user_id", "ref_date"], ["ts", "event_id"]).select(
+        "user_id", "ref_date", "value"
     )
     hist = scd2_history(latest, keys=["user_id"], effective_col="ref_date")
     return hist.select("user_id", "valid_from", "valid_to", "value").orderBy(
@@ -194,13 +193,11 @@ def statcan_latest_revision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "Latest value wins": WDS re-publishes observations; only the most
     # recent revision per (series, ref_date) is current. One window
     # shuffle on (series, date) — no self-join.
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id", "ref_date").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("ref_date", F.date_format("ts", "yyyy-MM-dd"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "ref_date", "value", F.col("event_id").alias("revision_event"))
+    ev = load_table(spark, sf_dir, "events").withColumn(
+        "ref_date", F.date_format("ts", "yyyy-MM-dd")
+    )
+    return latest_revision(ev, ["user_id", "ref_date"], ["ts", "event_id"]).select(
+        "user_id", "ref_date", "value", F.col("event_id").alias("revision_event")
     )  # no trailing sort: driver hash is order-insensitive
 
 

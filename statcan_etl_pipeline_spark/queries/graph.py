@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.portable import pround, sql_round as R
+from ..operators.dedup import group_pairs, lsh_census_from_index
 from ..registry import query
 
 PR_ITERS = 3
@@ -210,30 +211,31 @@ items AS (
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct unordered part pairs sharing an order. Pair expansion is
-    bounded per order by that order's item count — never a cartesian.
-
-    r14 (guide §2.3): pairs come from a SORTED per-order part array
-    (posexplode + suffix slice — the triangles wedge-emit shape) rather
-    than the orderkey self-join: one groupBy shuffle of the raw
-    (orderkey, partkey) rows replaces distinct-shuffle + join, and
-    exactly C(k, 2) rows are emitted per order with no join machinery.
-    Output is the identical distinct u < v edge set (the sorted array
-    guarantees u < v per emit; parity-checked exact at sf0.1, 1,196,000
-    edges). Interleaved A/B min-of-3: 1.51-1.62 → 1.12-1.24 s, new side
-    won every pair — and this build is paid by five bench members."""
+    """Distinct unordered part pairs u < v sharing an order. Pair
+    expansion is bounded per order by that order's item count — never a
+    cartesian: one groupBy shuffle of the raw (orderkey, partkey) rows,
+    then exactly C(k, 2) rows per order (`group_pairs`) and one distinct
+    for parts co-ordered more than once."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.array_distinct(F.collect_list("l_partkey"))).alias("ps")
+    return group_pairs(li, "l_orderkey", "l_partkey", ("u", "v")).distinct()
+
+
+def _hub_capped_adjacency(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(deg, small): co-purchase degrees, and the directed (node, nbr)
+    adjacency whose shared-neighbour side `node` has degree ≤
+    _SIM_HUB_CAP — each part's "document" for the banded similarity
+    family is its `nbr` row set here. `edges` and `deg` feed several
+    branches, so both are lazily checkpointed; callers checkpoint
+    `small` where it feeds more than one branch."""
+    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
+    deg = _copurchase_degrees(edges).localCheckpoint(eager=False)
+    adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
+        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
     )
-    return (
-        per_order.select(F.posexplode("ps").alias("i", "u"), F.col("ps"))
-        .select(
-            "u",
-            F.explode(F.slice("ps", F.col("i") + F.lit(2), F.size("ps"))).alias("v"),
-        )
-        .distinct()
-    )
+    small = adj.join(deg.filter(F.col("d") <= _SIM_HUB_CAP).select("node"), "node")
+    return deg, small
 
 
 def _copurchase_degrees(edges: DataFrame) -> DataFrame:
@@ -607,7 +609,7 @@ def _copurchase_bands_ctes() -> str:
 def _copurchase_sim_oracle() -> str:
     return f"""
 WITH {_copurchase_bands_ctes()}, cold AS (
-  -- band-bucket cap mirrored from operators/dedup.py:lsh_candidate_pairs
+  -- band-bucket cap mirrored from group_pairs(max_size=_SIM_BUCKET_CAP)
   SELECT band, key FROM bands GROUP BY band, key
   HAVING count(*) <= {_SIM_BUCKET_CAP}
 ), kept AS (
@@ -644,23 +646,12 @@ def _banded_similarity(
     band_rows: int,
     bucket_cap: int,
 ) -> DataFrame:
-    # r11: the edges lineage (lineitem self-join) fed four branches —
-    # lazily checkpointed, built once. r12: `small` feeds the minhash
-    # path AND the adjacency-array verify path, so it is lazily
-    # checkpointed too (the banded index inside lsh_pairs_from_index
-    # checkpoints itself). Parameterized so the A/B harness can sweep
-    # (n_hashes, band_rows); the registered query pins the constants
-    # the oracle replays.
-    from ..operators.dedup import lsh_pairs_from_index
-
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = _copurchase_degrees(edges).localCheckpoint(eager=False)
-    adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    small = adj.join(
-        deg.filter(F.col("d") <= _SIM_HUB_CAP).select("node"), "node"
-    ).localCheckpoint(eager=False)
+    # r12: `small` feeds the minhash path AND the adjacency-array
+    # verify path, so it is lazily checkpointed. Parameterized so the
+    # A/B harness can sweep (n_hashes, band_rows); the registered query
+    # pins the constants the oracle replays.
+    deg, small = _hub_capped_adjacency(spark, sf_dir)
+    small = small.localCheckpoint(eager=False)
     # each part's "document" is its hub-capped neighbor set; shingles
     # are the neighbor ids rendered as strings (matches the oracle's
     # CAST(node AS VARCHAR)); minhash + banding happen in ONE slim
@@ -674,14 +665,14 @@ def _banded_similarity(
     # cross-band duplicate rate is 1.009 at sf0.1 (446,540 raw vs
     # 442,752 distinct pairs), so the pre-verify distinct paid a full
     # 16-byte-per-pair shuffle + HashAggregate barrier over the whole
-    # candidate stream to save 0.9% of the verifies. dedup=False keeps
-    # the emit pipelined straight into the verify joins; every verify
+    # candidate stream to save 0.9% of the verifies. The raw per-band
+    # emit stays pipelined straight into the verify joins; every verify
     # column (common, degrees, jaccard) is a deterministic function of
     # the pair, so the pair-key dedup at the END collapses the duplicate
     # rows to the identical result set (parity EQUAL at sf0.1; A/B won
     # all pairs, 9.9-16.6 → 7.0-7.7 s).
-    cand = lsh_pairs_from_index(banded, bucket_cap, dedup=False).select(
-        F.col("doc_a").alias("part_x"), F.col("doc_b").alias("part_y")
+    cand = group_pairs(
+        banded, ["band", "key"], "doc_id", ("part_x", "part_y"), bucket_cap
     )
     # EXACT verify on candidates only: |N(x) ∩ N(y)| via array_intersect
     # of the two adjacency arrays — per-row memory is O(deg_x + deg_y),
@@ -721,7 +712,7 @@ def _banded_similarity(
             "deg_y",
             pround(jac, 6).alias("jaccard"),
         )
-        # collapses the dedup=False emit's per-band duplicates on the
+        # collapses the raw emit's per-band duplicates on the
         # pair key (every other column is pair-deterministic); runs
         # over the τ-survivors only, not the 446k-pair candidate stream
         .dropDuplicates(["part_x", "part_y"])
@@ -775,14 +766,7 @@ def copurchase_band_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     _sim_banded_index build); sum of candidate_pairs where capped=1
     upper-bounds the pairs the cap drops (exact per band, pre-dedup).
     O(distinct sizes) output."""
-    from ..operators.dedup import lsh_census_from_index
-
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = _copurchase_degrees(edges).localCheckpoint(eager=False)
-    adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    small = adj.join(deg.filter(F.col("d") <= _SIM_HUB_CAP).select("node"), "node")
+    _, small = _hub_capped_adjacency(spark, sf_dir)
     banded = _sim_banded_index(
         small.select(
             F.col("nbr").alias("doc_id"), F.col("node").cast("string").alias("sh")
@@ -943,17 +927,9 @@ def copurchase_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     collect_list/array_intersect verify shape, so cost is
     O(|candidates|·n_hashes) after one extra shuffle — same scale
     envelope as copurchase_part_similarity."""
-    from ..operators.dedup import lsh_pairs_from_index
-
     p = F.lit(_SIM_KM_PRIME).cast("long")
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = _copurchase_degrees(edges).localCheckpoint(eager=False)
-    adj = edges.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionAll(
-        edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    small = adj.join(
-        deg.filter(F.col("d") <= _SIM_HUB_CAP).select("node"), "node"
-    ).localCheckpoint(eager=False)
+    _, small = _hub_capped_adjacency(spark, sf_dir)
+    small = small.localCheckpoint(eager=False)
     hashed = small.select(
         F.col("nbr").alias("doc_id"),
         (
@@ -979,9 +955,9 @@ def copurchase_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFram
         ]
     )
     banded = sig.select("doc_id", F.posexplode(band_arr).alias("band", "key"))
-    cand = lsh_pairs_from_index(banded, _SIM_BUCKET_CAP).select(
-        F.col("doc_a").alias("part_x"), F.col("doc_b").alias("part_y")
-    )
+    cand = group_pairs(
+        banded, ["band", "key"], "doc_id", ("part_x", "part_y"), _SIM_BUCKET_CAP
+    ).distinct()
     sets = small.groupBy("nbr").agg(
         F.collect_list("node").alias("ns"), F.count(F.lit(1)).alias("n")
     )
@@ -1425,25 +1401,11 @@ def part_label_propagation_communities(spark: SparkSession, sf_dir: str) -> Data
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part")
     )
-    # r14 (guide §2.3 — the _copurchase_edges precedent): weighted pairs
-    # come from each order's SORTED distinct part array (posexplode +
-    # suffix slice emits exactly C(k, 2) src < dst rows per order) with
-    # the ≤_LPA_ORDER_CAP filter applied to the array size — one groupBy
-    # shuffle replaces the pp distinct + per-order count + double join.
-    # w = number of orders containing both parts, identical because pp
-    # was distinct per (order, part). Parity-checked exact at sf0.1
-    # (1,063,648 weighted pairs); interleaved A/B min-of-3: pair build
-    # 1.37-3.38 → 1.00-1.18 s, new side won all three pairs.
-    per_order = li.groupBy("ok").agg(
-        F.sort_array(F.array_distinct(F.collect_list("part"))).alias("ps")
-    )
+    # weighted pairs: w = number of orders of at most _LPA_ORDER_CAP
+    # distinct parts that contain both parts (the oracle's `small`
+    # orders; group_pairs counts distinct parts per order, as pp does)
     pairs = (
-        per_order.filter(F.size("ps") <= _LPA_ORDER_CAP)
-        .select(F.posexplode("ps").alias("i", "src"), F.col("ps"))
-        .select(
-            "src",
-            F.explode(F.slice("ps", F.col("i") + F.lit(2), F.size("ps"))).alias("dst"),
-        )
+        group_pairs(li, "ok", "part", ("src", "dst"), _LPA_ORDER_CAP)
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )

@@ -90,8 +90,8 @@ def _lsh_candidates(emb: DataFrame, n_tables: int, n_planes: int) -> DataFrame:
     runner, where the (3, 4) knob's 62M candidate pairs through a full
     distinct are themselves the measurement being reported. Before
     pointing this helper at any larger or uncontrolled corpus, add the
-    hot-bucket anti-join + census from operators/dedup.py
-    (lsh_pairs_from_index / lsh_census_from_index)."""
+    bucket cap + census from operators/dedup.py (`group_pairs` with
+    `max_size`, `lsh_census_from_index`)."""
     from .similarity import lsh_bucket
 
     keys = F.array(

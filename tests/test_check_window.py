@@ -16,12 +16,10 @@ import check_window  # noqa: E402
 
 
 def test_hashes_cover_every_registered_query():
-    cur, mod_files, mod_queries = check_window._current_hashes()
+    cur = check_window._current_hashes()
     from statcan_etl_pipeline_spark.registry import QUERIES
 
     assert set(cur) == set(QUERIES)
-    # every query maps to a hashed module file
-    assert set().union(*mod_queries.values()) == set(QUERIES)
     assert all(len(h) == 32 for h in cur.values())
 
 
@@ -44,22 +42,59 @@ def test_v2_hash_covers_referenced_module_helpers():
     fn = QUERIES["dedup_embedding_lsh"]
     closure = check_window._referenced_closure(fn)
     assert "_embedding_lsh_pairs" in closure
-    v1, _, _ = check_window._current_hashes(version=1)
-    v2, _, _ = check_window._current_hashes(version=2)
+    v1 = check_window._current_hashes(version=1)
+    v2 = check_window._current_hashes(version=2)
     assert v1["dedup_embedding_lsh"] != v2["dedup_embedding_lsh"]
     # referenced constants ride along too (imported tuning knobs)
     assert "--const" in closure
 
 
+def test_v3_hash_covers_dict_constants(monkeypatch):
+    """pipeline_declarative_demo is one call on the module-level dict
+    `_DEMO_SPEC`: editing the spec must move its v3 hash (v2 hashed
+    scalar constants only, so it missed the edit)."""
+    from statcan_etl_pipeline_spark.queries import etl
+
+    v2 = check_window._current_hashes(version=2)["pipeline_declarative_demo"]
+    v3 = check_window._current_hashes(version=3)["pipeline_declarative_demo"]
+    monkeypatch.setitem(etl._DEMO_SPEC, "source", "orders")
+    assert check_window._current_hashes(version=2)["pipeline_declarative_demo"] == v2
+    assert check_window._current_hashes(version=3)["pipeline_declarative_demo"] != v3
+
+
+def test_v3_hash_does_not_depend_on_hash_seed():
+    """Set constants (e.g. functions.text.STOPWORDS) are hashed in
+    sorted order, so two interpreters with different string-hash seeds
+    agree on every v3 hash."""
+    script = (
+        "import json, sys; sys.path.insert(0, 'scripts'); import check_window; "
+        "print(json.dumps(check_window._current_hashes(3), sort_keys=True))"
+    )
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", script],
+            capture_output=True,
+            text=True,
+            cwd=REPO,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            check=True,
+        ).stdout
+        for seed in ("1", "2")
+    ]
+    assert outs[0] == outs[1]
+
+
 def test_manifest_schema_and_clean_tree_passes():
-    """The committed manifest has the {queries, modules} shape, and
+    """The committed manifest has the {version, queries} shape, and
     running the checker in the current tree exits 0 or 1 (never the
     no-manifest exit 2) — if this tree has query edits the checker
     must say they're in the window (exit 0) for the round to be
-    shippable, so assert exit 0."""
+    shippable, so assert exit 0. The closure alone decides what moved:
+    no module-file WARNING is printed."""
     with open(check_window.MANIFEST) as f:
         snap = json.load(f)
-    assert "queries" in snap or all(len(v) == 32 for v in snap.values())
+    assert set(snap) == {"version", "queries"}
+    assert snap["version"] in (2, check_window.HASH_VERSION)
     proc = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "check_window.py")],
         capture_output=True,
@@ -67,6 +102,7 @@ def test_manifest_schema_and_clean_tree_passes():
         cwd=REPO,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
+    assert "WARNING" not in proc.stdout
 
 
 
@@ -95,11 +131,11 @@ def test_snapshotted_query_that_is_no_longer_registered_fails(
     """A query in the manifest that the registry no longer has (a move
     that dropped a function) fails the check, even though no registered
     query's hash moved."""
-    cur, mod_files, _ = check_window._current_hashes()
+    cur = check_window._current_hashes()
     cur["no_such_query"] = "0" * 32
     manifest = tmp_path / "query_hashes.json"
     manifest.write_text(
-        json.dumps({"version": check_window.HASH_VERSION, "queries": cur, "modules": mod_files})
+        json.dumps({"version": check_window.HASH_VERSION, "queries": cur})
     )
     monkeypatch.setattr(check_window, "MANIFEST", str(manifest))
     monkeypatch.setattr(sys, "argv", ["check_window.py"])

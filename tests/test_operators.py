@@ -8,9 +8,11 @@ import datetime
 from pyspark.sql import functions as F
 
 from statcan_etl_pipeline_spark.operators.dedup import (
+    band_keys,
     exploded_shingles,
+    group_pairs,
     jaccard_pairs,
-    lsh_candidate_pairs,
+    lsh_census_from_index,
     minhash_signature,
 )
 from statcan_etl_pipeline_spark.operators.multimodal import (
@@ -26,6 +28,14 @@ from statcan_etl_pipeline_spark.plans.pipeline import run_pipeline
 
 def _ts(s: str) -> datetime.datetime:
     return datetime.datetime.fromisoformat(s)
+
+
+def _lsh_pairs(sig, max_bucket_size=None) -> set[tuple[int, int]]:
+    """Distinct banded-LSH candidate pairs of `sig`."""
+    pairs = group_pairs(
+        band_keys(sig), ["band", "key"], "doc_id", ("doc_a", "doc_b"), max_bucket_size
+    )
+    return {(r["doc_a"], r["doc_b"]) for r in pairs.distinct().collect()}
 
 
 def test_asof_join_exact_timestamp_matches(spark):
@@ -101,7 +111,7 @@ def test_minhash_identical_docs_always_candidates(spark):
         "doc_id long, shingles array<string>",
     )
     sig = minhash_signature(exploded_shingles(docs))
-    pairs = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sig).collect()}
+    pairs = _lsh_pairs(sig)
     assert (1, 2) in pairs  # identical signature → all bands collide
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
@@ -114,30 +124,22 @@ def test_lsh_bucket_cap_drops_hot_bucket_keeps_cold(spark):
     rows += [(10, ["xxxxx", "yyyyy"]), (11, ["xxxxx", "yyyyy"])]
     docs = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
     sig = minhash_signature(exploded_shingles(docs))
-    uncapped = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sig).collect()}
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(sig, max_bucket_size=4).collect()
-    }
+    uncapped = _lsh_pairs(sig)
+    capped = _lsh_pairs(sig, max_bucket_size=4)
     assert len(uncapped) == 16  # 15 hot + 1 cold
     assert capped == {(10, 11)}
     # cap >= bucket size is a no-op
-    assert {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(sig, max_bucket_size=6).collect()
-    } == uncapped
+    assert _lsh_pairs(sig, max_bucket_size=6) == uncapped
 
 
 def test_lsh_bucket_census_reports_capped_mass(spark):
-    from statcan_etl_pipeline_spark.operators.dedup import lsh_bucket_census
-
     rows = [(i, ["aaaaa", "bbbbb", "ccccc"]) for i in range(1, 7)]
     rows += [(10, ["xxxxx", "yyyyy"]), (11, ["xxxxx", "yyyyy"])]
     docs = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
     sig = minhash_signature(exploded_shingles(docs))
     census = {
         r["bucket_size"]: r
-        for r in lsh_bucket_census(sig, max_bucket_size=4).collect()
+        for r in lsh_census_from_index(band_keys(sig), max_bucket_size=4).collect()
     }
     # 2 bands: each has one 6-doc bucket and one 2-doc bucket
     assert census[6]["n_buckets"] == 2
@@ -148,12 +150,7 @@ def test_lsh_bucket_census_reports_capped_mass(spark):
     assert census[2]["capped"] == 0
     # the census's capped mass is exactly what the cap drops (per-band,
     # pre-distinct: 15 unique pairs dropped, both bands agree)
-    assert len({
-        (r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sig).collect()
-    }) - len({
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(sig, max_bucket_size=4).collect()
-    }) == 15
+    assert len(_lsh_pairs(sig)) - len(_lsh_pairs(sig, max_bucket_size=4)) == 15
 
 
 def test_pipeline_runner_ops(spark):

@@ -2,13 +2,17 @@
 
 from __future__ import annotations
 
+from collections import Counter
+from itertools import combinations
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from statcan_etl_pipeline_spark.operators.dedup import (
+    band_keys,
     exploded_shingles,
+    group_pairs,
     jaccard_pairs,
-    lsh_candidate_pairs,
     minhash_signature,
 )
 
@@ -36,8 +40,33 @@ def test_identical_docs_are_lsh_candidates(spark, shingles):
         [(0, shingles), (1, shingles)], "doc_id long, shingles array<string>"
     )
     sig = minhash_signature(exploded_shingles(df))
-    pairs = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sig).collect()}
-    assert (0, 1) in pairs
+    pairs = group_pairs(band_keys(sig), ["band", "key"], "doc_id", ("doc_a", "doc_b"))
+    assert (0, 1) in {(r["doc_a"], r["doc_b"]) for r in pairs.distinct().collect()}
+
+
+# every group repeats its first members, so duplicates always occur
+_members = st.lists(st.integers(0, 5), min_size=1, max_size=6).map(lambda m: m + m[:2])
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.lists(_members, min_size=1, max_size=5), st.none() | st.integers(1, 5))
+def test_group_pairs_equals_combinations_per_group(spark, groups, max_size):
+    """One row per (group, a < b pair) over each group's sorted
+    distinct members — duplicate members collapse, groups with more
+    than `max_size` distinct members emit nothing."""
+    rows = [(g, m) for g, members in enumerate(groups) for m in members]
+    df = spark.createDataFrame(rows, "g long, m long")
+    out = Counter(
+        (r["a"], r["b"])
+        for r in group_pairs(df, "g", "m", ("a", "b"), max_size).collect()
+    )
+    expected = Counter(
+        pair
+        for members in groups
+        if max_size is None or len(set(members)) <= max_size
+        for pair in combinations(sorted(set(members)), 2)
+    )
+    assert out == expected
 
 
 def test_exact_dedup_idempotent(spark, sf_small):

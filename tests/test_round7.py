@@ -519,8 +519,9 @@ def test_incremental_dedup_delta_side_only(spark, sf_small):
         .withColumn("shingles", char_shingles("norm", 5))
     )
     bands = band_keys(minhash_signature(exploded_shingles(docs)))
-    # band_keys is the exact decomposition lsh_candidate_pairs uses:
-    # joining it to itself reproduces the batch candidate set
+    # band_keys is the exact index the batch pairs are emitted from
+    # (below the bucket cap at this SF): an independent self-join on it
+    # reproduces the batch candidate set
     a, b = bands.alias("a"), bands.alias("b")
     rebuilt = {
         (r["doc_a"], r["doc_b"])
